@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   private val Repeats = 3
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same timezone as Verify/PlansDump: tz-dependent queries
-      // (hour windows, date rollups) must benchmark the SAME
-      // computation that was verified, on any machine
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the engine's only unpartitioned windows rank ≤k-row tops (PLANS
-    // documents the bound) — WindowExec's blanket single-partition
-    // warning is noise here; a constant partition key cannot silence
-    // it (EliminateWindowPartitions folds it away), so quiet the
-    // logger directly
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    // same session as Verify: the benchmark times the SAME
+    // computation that was verified
+    val spark = Sessions.local(Sessions.envCpus)
     // warm-up: JIT + codegen + parquet footer caches, so the first
     // timed query doesn't absorb session startup cost; guarded so a
     // bad sfDir still reaches the per-query loop (which reports -1s)
@@ -41,7 +23,7 @@ object Bench {
       .map(_.split(',').toSet)
       .map(only => SparkEntry.queries.filter { case (n, _) => only(n) })
       .getOrElse(SparkEntry.queries)
-    // contamination instrumentation (r12 verdict #6): per-query GC
+    // contamination instrumentation: per-query GC
     // time and heap occupancy, to separate "this query got slower"
     // from "the JVM around it degraded" in late-suite timings
     import scala.jdk.CollectionConverters._
@@ -74,8 +56,8 @@ object Bench {
       // the ContextCleaner only frees them on GC, which a 128 GB heap
       // may not run for hundreds of queries — accumulated blocks eat
       // execution memory and contaminated later queries' timings by
-      // up to 10x in long captures (r11: embedding_pca 2.5 s isolated
-      // vs 26 s late in a 258-query run). No cross-query DataFrame
+      // up to 10x in long captures (embedding_pca 2.5 s isolated vs
+      // 26 s late in a 258-query run). No cross-query DataFrame
       // reuse exists, so unpersisting between entries is safe.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
@@ -101,9 +83,8 @@ object Bench {
       else medians.sum
     // the FULL per-query record (median/min/spread for every query)
     // goes to stderr: the driver's BENCH capture keeps only an ~2 KB
-    // stdout tail, and for three rounds a 260-query median map (~10+
-    // KB) pushed the parseable summary out of the window
-    // (BENCH_r09..r11 all have parsed:null)
+    // stdout tail, and a 260-query median map (~10+ KB) pushes the
+    // parseable summary out of that window
     System.err.println(s"""{"queries_median":${jsonMap(mapped(median))}""" +
       s""","queries_min":${jsonMap(mapped(ts => if (ts.contains(-1.0)) -1.0 else ts.min))}""" +
       s""","queries_spread":${jsonMap(mapped(ts => if (ts.contains(-1.0)) -1.0 else ts.max - ts.min))}""" +
@@ -116,18 +97,17 @@ object Bench {
     // visible on stdout, not only via the poisoned total
     val (failed, succeeded) = mapped(median).toSeq.partition { case (_, m) => m < 0 }
     val top20 = (failed ++ succeeded.sortBy { case (_, m) => -m }).take(20)
-    // self-adjudication (r13 verdict #3): four rounds running, single
-    // full-surface captures needed manual outlier re-times (r13:
-    // quality_score 8.3 driver vs 0.38 solo — host co-tenancy, not
-    // structure). Re-time the top-16 slowest queries SOLO in the same
-    // warm JVM after the suite (r14's tail had inflated entries just
-    // outside a top-12 cut) and emit both numbers: when an in-suite
-    // median and its retime disagree, the retime is the structural
+    // self-adjudication: single full-surface captures need outlier
+    // re-times (quality_score 8.3 in-suite vs 0.38 solo — host
+    // co-tenancy, not structure). Re-time the top-16 slowest queries
+    // SOLO in the same warm JVM after the suite (a top-12 cut missed
+    // inflated entries just outside it) and emit both numbers: when an
+    // in-suite median and its retime disagree, the retime is the structural
     // number (BASELINE.md adjudication convention, carried by the
     // capture itself). A retime run that THROWS poisons that query's
     // retime to the same -1 sentinel the main loop uses — recording
     // time-to-failure as a median would publish a flattering number
-    // for a flaking query (r14 ADVICE).
+    // for a flaking query.
     val retimeSet = succeeded.sortBy { case (_, m) => -m }.take(16)
     val retimed: Seq[(String, Double)] =
       retimeSet.map { case (name, _) =>
@@ -147,14 +127,13 @@ object Bench {
           .foreach(_.unpersist(blocking = false))
         name -> median(times)
       }
-    // the adjudicated headline (r14 verdict #7, convention fixed per
-    // r15 verdict #7): the suite total with each retimed query's
-    // in-suite median replaced by min(in-suite median, solo retime).
-    // Both numbers are medians-of-3 of the same work, so the smaller
-    // is the less-contended measurement — r15's retime phase ran
-    // HOTTER than the suite (lang_id_learned 5.3 in-suite vs 18.5
-    // retimed) and the old always-prefer-the-retime rule published
-    // the inflated number. The old convention is kept alongside as
+    // the adjudicated headline: the suite total with each retimed
+    // query's in-suite median replaced by min(in-suite median, solo
+    // retime). Both numbers are medians-of-3 of the same work, so the
+    // smaller is the less-contended measurement — a retime phase can
+    // run HOTTER than the suite (lang_id_learned 5.3 in-suite vs 18.5
+    // retimed), and always preferring the retime publishes the
+    // inflated number. That older convention is kept alongside as
     // value_adjusted_retime so round-over-round rows stay comparable.
     // Any -1 (suite or retime) poisons both, like the gross total.
     val valueAdjusted =

@@ -6,11 +6,10 @@ import graft.ops._
   * SparkEntry.queries entry, computing the same values with the same
   * column names (SURVEY.md §5.2 rules: deterministic ordering, every
   * tie broken, doubles rounded on both sides, -0.0 normalized).
-  * Moved out of SparkEntry verbatim in round 14 (r13 verdict #9,
-  * registry hygiene): SparkEntry stays the single driver contract and
-  * re-exports [[all]]; this file owns the shared DuckDB fragments
-  * (duck*) and both oracle maps. Zero behavior change — the driver
-  * reads SparkEntry.oracleSql exactly as before.
+  * SparkEntry stays the single query contract and re-exports [[all]];
+  * this file owns both oracle maps and the shared DuckDB fragments
+  * (duck*): a CTE chain that more than one oracle needs is written
+  * once as a fragment and interpolated, never copied.
   */
 private[graft] object OracleRegistry {
 
@@ -84,11 +83,23 @@ private[graft] object OracleRegistry {
        |  FROM psd d JOIN pqa$r a ON a.vec_id = d.vec_id AND a.s = d.s
        |  GROUP BY 1, 2, 3)""".stripMargin
 
+  /** The pqTopK training unroll over `psd (vec_id, s, ld, x)`: seeds
+    * from the first 16 vectors, two update rounds, final assignment
+    * `pqa3` against the codebook `pqc2`. */
+  private lazy val duckPqTrain =
+    s"""pqc0 AS (SELECT s, vec_id AS code, ld, round(x, 6) + 0 AS cv
+       |         FROM psd WHERE vec_id < 16),
+       |${duckPqAssign(1, "pqc0")},
+       |${duckPqUpdate(1)},
+       |${duckPqAssign(2, "pqc1")},
+       |${duckPqUpdate(2)},
+       |${duckPqAssign(3, "pqc2")}""".stripMargin
+
   /** DuckDB twin of VectorOps.ivfPqCandidates: the residual-IVFADC
     * CTE chain ending in `adc (query_id, vec_id, qdist)`. Builds on
     * [[duckSqrtCells]] (coarse cells) — primary-cell residuals feed
-    * the [[duckPqAssign]]/[[duckPqUpdate]] training unroll via the
-    * `psd` name those fragments expect; probes carry the derived
+    * the [[duckPqTrain]] unroll via the `psd` name it expects;
+    * probes carry the derived
     * nProbe budget; each probed cell gets its own query-residual LUT.
     * Shared by the ann_ivf_pq and ann_recall_ivfpq oracles. */
   private lazy val duckIvfPqAdc =
@@ -98,13 +109,7 @@ private[graft] object OracleRegistry {
        |        FROM dims d JOIN a0 USING (vec_id)
        |        JOIN cent c ON c.c_label = a0.c_label AND c.dim = d.dim),
        |psd AS MATERIALIZED (SELECT vec_id, dim // 8 AS s, dim % 8 AS ld, x FROM res),
-       |pqc0 AS (SELECT s, vec_id AS code, ld, round(x, 6) + 0 AS cv
-       |         FROM psd WHERE vec_id < 16),
-       |${duckPqAssign(1, "pqc0")},
-       |${duckPqUpdate(1)},
-       |${duckPqAssign(2, "pqc1")},
-       |${duckPqUpdate(2)},
-       |${duckPqAssign(3, "pqc2")},
+       |$duckPqTrain,
        |probes AS MATERIALIZED (SELECT vec_id AS query_id, c_label FROM ranked
        |           WHERE rn <= greatest(3, CAST(ceil((SELECT k FROM kk) / 16.0)
        |                                        AS BIGINT))
@@ -138,16 +143,7 @@ private[graft] object OracleRegistry {
        |      row_number() OVER (PARTITION BY query_id
        |        ORDER BY qdist, vec_id) AS qrank
        |    FROM adc) WHERE qrank <= 48),
-       |prr AS (SELECT pcand.query_id, pcand.vec_id, pcand.qdist,
-       |    round(${duckCos("c.embedding", "q.embedding")}, 6) + 0 AS cos_sim
-       |  FROM pcand
-       |  JOIN embeddings c ON c.vec_id = pcand.vec_id
-       |  JOIN embeddings q ON q.vec_id = pcand.query_id)
-       |SELECT query_id, rank, vec_id, qdist, cos_sim FROM (
-       |  SELECT query_id, vec_id, qdist, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-       |  FROM prr) WHERE rank <= 3""".stripMargin
+       |$duckPqCosTop3""".stripMargin
 
   /** DuckDB twin of one TextOps.bpeMerges round: pair counts from
     * `w$r`, argmax with (count desc, lhs, rhs) tie-break → `t$r`,
@@ -290,6 +286,8 @@ private[graft] object OracleRegistry {
     * BIGINT cast (DuckDB list_sum returns DOUBLE) is added here. */
   private def duckHash24(sExpr: String): String =
     s"CAST(${graft.functions.PortableHash.duckdbHash24(sExpr)} AS BIGINT)"
+  private def duckHash48(sExpr: String): String =
+    s"CAST(${graft.functions.PortableHash.duckdbHash48(sExpr)} AS BIGINT)"
 
   /** DuckDB twin of EmbedOps.tokenize: CTE producing (doc_id, pos, tok). */
   private val duckToks =
@@ -359,10 +357,9 @@ private[graft] object OracleRegistry {
       |  WHERE t2 IS NOT NULL),
       |shd AS (SELECT DISTINCT doc_id, shingle FROM shp)""".stripMargin
 
-  /** DuckDB twin of DedupOps.minhashCandidates as a CTE block ending
-    * in `cand (a_id, b_id, n_shared_bands)`; requires toks+shingle
-    * CTEs. Shared by the three LSH-driven dedup oracles. */
-  private val duckLshCand =
+  /** DuckDB twin of DedupOps' MinHash signature and banding over
+    * `shd`: `mh (doc_id, seed, minh)` and `bk (doc_id, band, band_sig)`. */
+  private val duckMinhashBands =
     s"""v AS (SELECT shingle, ${duckHash24("shingle")} AS h0
        |      FROM (SELECT DISTINCT shingle FROM shd)),
        |mh AS (
@@ -374,7 +371,13 @@ private[graft] object OracleRegistry {
        |bk AS (
        |  SELECT doc_id, seed // 3 AS band,
        |         string_agg(CAST(minh AS VARCHAR), '-' ORDER BY seed) AS band_sig
-       |  FROM mh GROUP BY 1, 2),
+       |  FROM mh GROUP BY 1, 2)""".stripMargin
+
+  /** DuckDB twin of DedupOps.minhashCandidates as a CTE block ending
+    * in `cand (a_id, b_id, n_shared_bands)`; requires toks+shingle
+    * CTEs. Shared by the three LSH-driven dedup oracles. */
+  private val duckLshCand =
+    s"""$duckMinhashBands,
        |cand AS (
        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared_bands
        |  FROM bk a JOIN bk b ON a.band = b.band AND a.band_sig = b.band_sig
@@ -398,7 +401,367 @@ private[graft] object OracleRegistry {
       |  JOIN sizes sa ON sa.doc_id = i.a_id
       |  JOIN sizes sb ON sb.doc_id = i.b_id)""".stripMargin
 
+  /** Shingles → LSH candidates → verified Jaccard of every candidate
+    * pair, `jac (a_id, b_id, inter, jaccard)`; requires `toks`. */
+  private lazy val duckNearDupJaccard =
+    s"""$duckShingles,
+       |$duckLshCand,
+       |$duckJaccardVerify""".stripMargin
+
+  /** Verified near-dup edges: [[duckNearDupJaccard]] kept at
+    * jaccard ≥ 0.5 as `edges (a_id, b_id)`; requires `toks`. */
+  private lazy val duckNearDupEdges =
+    s"""$duckNearDupJaccard,
+       |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5)""".stripMargin
+
+  /** Both directions of every `edges (a_id, b_id)` row: `und (src, dst)`. */
+  private lazy val duckUndirected =
+    """und AS (SELECT a_id AS src, b_id AS dst FROM edges
+      |        UNION ALL SELECT b_id, a_id FROM edges)""".stripMargin
+
+  /** Recursive reachability over `edges` (needs WITH RECURSIVE):
+    * `reach (id, r)` for every node r reaches — the oracle twin of
+    * Spark-side min-label propagation to fixpoint. */
+  private lazy val duckReachability =
+    s"""$duckUndirected,
+       |reach AS (
+       |  SELECT DISTINCT src AS id, src AS r FROM und
+       |  UNION
+       |  SELECT u.src, reach.r FROM und u JOIN reach ON reach.id = u.dst)""".stripMargin
+
+  /** Near-dup connected components: `comp (doc_id, component_id)`,
+    * component id = min doc_id transitively reachable over verified
+    * edges. Needs WITH RECURSIVE and `toks`. */
+  private lazy val duckNearDupComponents =
+    s"""$duckNearDupEdges,
+       |$duckReachability,
+       |comp AS (SELECT id AS doc_id, min(r) AS component_id FROM reach GROUP BY 1)""".stripMargin
+
+  /** DuckDB twin of EmbedOps.embedSparse over `toks`: hashed-TF
+    * weights `${p}w (doc_id, dim, weight)`, L2-normalized and rounded;
+    * every CTE name carries the prefix `p`. */
+  private def duckSparseWeights(p: String, dims: Int): String = {
+    val pad = " " * p.length
+    s"""${p}hashed AS (SELECT doc_id, ${duckHash24("tok")} % $dims AS dim FROM toks),
+       |${p}tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
+       |$pad       FROM ${p}hashed GROUP BY 1, 2),
+       |${p}nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM ${p}tf GROUP BY 1),
+       |${p}w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
+       |$pad      FROM ${p}tf t JOIN ${p}nrm n USING (doc_id))""".stripMargin
+  }
+
+  /** DuckDB twin of SearchOps.searchText's scoring for the query
+    * 'spark vector hash join' against `w`: `scored (doc_id, score)`. */
+  private lazy val duckTextQueryScored =
+    s"""qtoks AS (SELECT trim(u.tok) AS tok
+       |          FROM unnest(string_split('spark vector hash join', ' ')) u(tok)
+       |          WHERE trim(u.tok) <> ''),
+       |qhashed AS (SELECT ${duckHash24("tok")} % 64 AS dim FROM qtoks),
+       |qtf AS (SELECT dim, CAST(count(*) AS DOUBLE) AS cnt FROM qhashed GROUP BY 1),
+       |qw AS (SELECT dim, round(cnt / (SELECT sqrt(sum(cnt*cnt)) FROM qtf), 6) + 0 AS qw
+       |       FROM qtf),
+       |scored AS (
+       |  SELECT w.doc_id, round(sum(w.weight * qw.qw ORDER BY dim), 6) + 0 AS score
+       |  FROM w JOIN qw USING (dim) GROUP BY 1)""".stripMargin
+
+  /** The same cosine chain for the query 'spark merge sort join' with
+    * every CTE prefixed `ct_` (beside other rankers): `q_toks`,
+    * `ct_w` and `ct_scored (doc_id, score)`. */
+  private lazy val duckMergeSortCosine =
+    s"""q_toks AS (SELECT trim(u.tok) AS tok
+       |           FROM unnest(string_split('spark merge sort join', ' ')) u(tok)
+       |           WHERE trim(u.tok) <> ''),
+       |${duckSparseWeights("ct_", 64)},
+       |ct_qh AS (SELECT ${duckHash24("tok")} % 64 AS dim FROM q_toks),
+       |ct_qtf AS (SELECT dim, CAST(count(*) AS DOUBLE) AS cnt FROM ct_qh GROUP BY 1),
+       |ct_qw AS (SELECT dim,
+       |            round(cnt / (SELECT sqrt(sum(cnt*cnt)) FROM ct_qtf), 6) + 0 AS qw
+       |          FROM ct_qtf),
+       |ct_scored AS (
+       |  SELECT w.doc_id, round(sum(w.weight * qw.qw ORDER BY dim), 6) + 0 AS score
+       |  FROM ct_w w JOIN ct_qw qw USING (dim) GROUP BY 1)""".stripMargin
+
+  /** The ranked top-10 tail over `scored (doc_id, score)`:
+    * `(rank, doc_id, source, score)`, ties broken on doc_id. */
+  private lazy val duckTopTenScored =
+    """SELECT rank, doc_id, source, score FROM (
+      |  SELECT s.doc_id, s.score, d.source,
+      |    row_number() OVER (ORDER BY s.score DESC, s.doc_id) AS rank
+      |  FROM scored s JOIN documents d USING (doc_id))
+      |WHERE rank <= 10""".stripMargin
+
+  /** Per (event_type, day) mean event value in integer micros:
+    * `daily (event_type, day, mm)`. */
+  private lazy val duckDailyMeanMicros =
+    """daily AS (SELECT event_type,
+      |         epoch_ns(ts) // 86400000000000 AS day,
+      |         CAST(round(round(avg(value), 6) * 1000000) AS BIGINT) AS mm
+      |       FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** Per-user profile over events: top event type `tt (user_id, top_type)`
+    * and activity/day buckets `prof (user_id, activity_bucket, days_bucket)`. */
+  private lazy val duckUserProfile =
+    """tc AS (SELECT user_id, event_type, count(*) AS n_t
+      |            FROM events GROUP BY 1, 2),
+      |tt AS (SELECT user_id, event_type AS top_type FROM (
+      |         SELECT user_id, event_type,
+      |           row_number() OVER (PARTITION BY user_id
+      |             ORDER BY n_t DESC, event_type) AS rn
+      |         FROM tc) WHERE rn = 1),
+      |pr AS (SELECT user_id, count(*) AS n_ev,
+      |         count(DISTINCT epoch_ns(ts) // 86400000000000) AS n_days
+      |       FROM events GROUP BY 1),
+      |prof AS (SELECT user_id,
+      |           least(10, n_ev // 10) AS activity_bucket,
+      |           least(10, n_days // 3) AS days_bucket
+      |         FROM pr)""".stripMargin
+
+  /** Exact cosine of every `cand (query_id, vec_id)` pair, top-3 per
+    * query, ties on vec_id: `(query_id, rank, vec_id, cos_sim)`. */
+  private lazy val duckCellCosTop3 =
+    s"""scored AS (
+       |  SELECT c.query_id, c.vec_id,
+       |    round(${duckCos("e.embedding", "q.embedding")}, 6) + 0 AS cos_sim
+       |  FROM cand c
+       |  JOIN embeddings e ON e.vec_id = c.vec_id
+       |  JOIN embeddings q ON q.vec_id = c.query_id),
+       |r AS (SELECT query_id, vec_id, cos_sim,
+       |        row_number() OVER (PARTITION BY query_id
+       |          ORDER BY cos_sim DESC, vec_id) AS rank
+       |      FROM scored)
+       |SELECT query_id, rank, vec_id, cos_sim FROM r WHERE rank <= 3""".stripMargin
+
+  /** IVF top-3 over `ranked`/`assigned` cells for queries vec_id < 10,
+    * probing the derived nProbe budget: exact cosine inside the probed
+    * cells, ranked per query, ties on vec_id. */
+  private lazy val duckIvfProbeTop3 =
+    s"""probes AS (SELECT vec_id AS query_id, c_label FROM ranked
+       |           WHERE rn <= greatest(3, CAST(ceil((SELECT k FROM kk) / 16.0) AS BIGINT))
+       |             AND vec_id < 10),
+       |cand AS (
+       |  SELECT DISTINCT p.query_id, a.vec_id
+       |  FROM probes p JOIN assigned a USING (c_label)
+       |  WHERE a.vec_id <> p.query_id),
+       |$duckCellCosTop3""".stripMargin
+
+  /** Three damped PageRank rounds over `edges`: `pr3 (id, pr)`, each
+    * round's sum folded in source order and rounded. */
+  private lazy val duckPageRank3 =
+    s"""$duckUndirected,
+       |deg AS (SELECT src, count(*) AS deg FROM und GROUP BY 1),
+       |pr0 AS (SELECT src AS id, 1.0 AS pr FROM deg),
+       |pr1 AS (SELECT u.dst AS id,
+       |    round(0.15 + 0.85 * sum(p.pr / d.deg ORDER BY u.src), 6) + 0 AS pr
+       |  FROM und u JOIN pr0 p ON p.id = u.src JOIN deg d ON d.src = u.src
+       |  GROUP BY 1),
+       |pr2 AS (SELECT u.dst AS id,
+       |    round(0.15 + 0.85 * sum(p.pr / d.deg ORDER BY u.src), 6) + 0 AS pr
+       |  FROM und u JOIN pr1 p ON p.id = u.src JOIN deg d ON d.src = u.src
+       |  GROUP BY 1),
+       |pr3 AS (SELECT u.dst AS id,
+       |    round(0.15 + 0.85 * sum(p.pr / d.deg ORDER BY u.src), 6) + 0 AS pr
+       |  FROM und u JOIN pr2 p ON p.id = u.src JOIN deg d ON d.src = u.src
+       |  GROUP BY 1)""".stripMargin
+
+  /** Symmetric int8 codes: the build-time scale `s (qs)` = max
+    * |component|, and per-vector codes `qz (vec_id, qc)`. */
+  private lazy val duckInt8Codes =
+    """s AS (
+      |  SELECT max(greatest(abs(CAST(list_min(embedding) AS DOUBLE)),
+      |                      abs(CAST(list_max(embedding) AS DOUBLE)))) AS qs
+      |  FROM embeddings),
+      |qz AS (SELECT vec_id,
+      |         list_transform(embedding, x ->
+      |           CAST(round(CAST(x AS DOUBLE) * 127.0 / s.qs) AS BIGINT)) AS qc
+      |       FROM embeddings, s)""".stripMargin
+
+  /** Symmetric int8 codes (`s` = max |component|) and the exact integer
+    * squared-L2 `cd (query_id, vec_id, qdist)` for queries vec_id < 10. */
+  private lazy val duckInt8Distances =
+    s"""$duckInt8Codes,
+       |cd AS (SELECT q.vec_id AS query_id, c.vec_id,
+       |         CAST(list_sum(list_transform(range(1, len(c.qc)+1),
+       |           i -> (c.qc[i] - q.qc[i]) * (c.qc[i] - q.qc[i]))) AS BIGINT) AS qdist
+       |       FROM qz c, qz q
+       |       WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id)""".stripMargin
+
+  /** 8-token shingles hashed per position, `hh (doc_id, pos, h)`, and
+    * the hashes shared by two or more docs, `dup (h)`; requires `toks`. */
+  private lazy val duckShingle8Dups =
+    s"""sh8 AS (
+       |  SELECT doc_id, pos, tok || ' ' || t1 || ' ' || t2 || ' ' || t3 || ' ' ||
+       |         t4 || ' ' || t5 || ' ' || t6 || ' ' || t7 AS shingle
+       |  FROM (SELECT doc_id, pos, tok,
+       |          lead(tok, 1) OVER w AS t1, lead(tok, 2) OVER w AS t2,
+       |          lead(tok, 3) OVER w AS t3, lead(tok, 4) OVER w AS t4,
+       |          lead(tok, 5) OVER w AS t5, lead(tok, 6) OVER w AS t6,
+       |          lead(tok, 7) OVER w AS t7
+       |        FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+       |  WHERE t7 IS NOT NULL),
+       |hh AS (SELECT doc_id, pos, ${duckHash24("shingle")} AS h FROM sh8),
+       |dup AS (SELECT h FROM hh GROUP BY h HAVING count(DISTINCT doc_id) >= 2)""".stripMargin
+
+  /** Embeddings as integer micros, centered per dim, their covariance
+    * `cov (di, dj, c)` and the power-iteration seed `v0 (dim, v)`. */
+  private lazy val duckCenteredCov =
+    """x AS (SELECT vec_id, CAST(u.ii - 1 AS BIGINT) AS dim,
+      |        CAST(round(CAST(embedding[u.ii] AS DOUBLE) * 1000000) AS BIGINT)
+      |          AS x6
+      |      FROM embeddings, unnest(range(1, len(embedding)+1)) u(ii)),
+      |mu AS (SELECT dim, CAST(round(avg(x6)) AS BIGINT) AS mu6
+      |       FROM x GROUP BY 1),
+      |dx AS MATERIALIZED (SELECT vec_id, dim, x6 - mu6 AS dx
+      |      FROM x JOIN mu USING (dim)),
+      |cov AS MATERIALIZED (
+      |  SELECT a.dim AS di, b.dim AS dj, CAST(sum(a.dx * b.dx) AS BIGINT) AS c
+      |  FROM dx a JOIN dx b USING (vec_id) GROUP BY 1, 2),
+      |v0 AS (SELECT DISTINCT di AS dim,
+      |         CASE WHEN di = 0 THEN 1.0 ELSE 0.0 END AS v FROM cov)""".stripMargin
+
+  /** DuckDB twin of TextOps.bpeMerges' first six rounds over `toks`:
+    * `w1` words as space-separated symbols, then rounds 1..6 (`t6`, `w7` last). */
+  private lazy val duckBpeMerges6 =
+    s"""w1 AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS wc,
+       |    array_to_string(list_transform(range(1, length(tok) + 1),
+       |                                   i -> tok[i:i]), '  ') AS syms
+       |  FROM toks GROUP BY tok),
+       |${(1 to 6).map(duckBpeRound).mkString(",\n")}""".stripMargin
+
   private def sqlList(xs: Seq[String]): String = xs.map(s => s"'$s'").mkString(", ")
+
+  /** DuckDB twin of SearchOps.bm25HardNegatives' scoring over `topn`
+    * and `toks`: each probe doc's top-3 keywords as its query, BM25 per
+    * (query_doc, doc) folded in term order, the probe itself excluded:
+    * `scored (query_doc, doc_id, score)`. */
+  private lazy val duckBm25HardNegScored =
+    """qt AS (SELECT doc_id AS query_doc, keyword AS tok FROM topn
+      |       WHERE doc_id < 10 AND rank <= 3),
+      |lens AS (SELECT doc_id, count(*) AS len_d FROM toks GROUP BY 1),
+      |stats AS (SELECT avg(len_d) AS avg_len FROM lens),
+      |nd AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs
+      |       FROM documents),
+      |tf AS (SELECT t.doc_id, t.tok, count(*) AS tf
+      |       FROM toks t JOIN (SELECT DISTINCT tok FROM qt) q USING (tok)
+      |       GROUP BY 1, 2),
+      |dfc AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
+      |scored AS (
+      |  SELECT qt.query_doc, tf.doc_id,
+      |    round(sum(ln((nd.n_docs - dfc.df + 0.5) / (dfc.df + 0.5) + 1)
+      |      * (tf.tf * 2.2)
+      |      / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * lens.len_d / stats.avg_len))
+      |      ORDER BY tf.tok), 6) + 0
+      |      AS score
+      |  FROM tf JOIN qt USING (tok) JOIN dfc USING (tok)
+      |       JOIN lens USING (doc_id), nd, stats
+      |  WHERE tf.doc_id <> qt.query_doc
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Exact cosine of the SRP `cand (query_id, vec_id)` pairs, top-3 per
+    * query with a BIGINT rank: `(query_id, rank, vec_id, cos_sim)`. */
+  private lazy val duckSrpCosTop3 =
+    s"""rr AS (SELECT cand.query_id, cand.vec_id,
+       |         round(${duckCos("c.embedding", "q.embedding")}, 6) + 0 AS cos_sim
+       |       FROM cand
+       |       JOIN embeddings c ON c.vec_id = cand.vec_id
+       |       JOIN embeddings q ON q.vec_id = cand.query_id)
+       |SELECT query_id, rank, vec_id, cos_sim FROM (
+       |  SELECT query_id, vec_id, cos_sim,
+       |    CAST(row_number() OVER (PARTITION BY query_id
+       |      ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
+       |  FROM rr) WHERE rank <= 3""".stripMargin
+
+  /** Brute-force cosine ground truth for queries vec_id < 10: top-3
+    * `ex (query_id, vec_id)` and its size `nex (n_exact)`. */
+  private lazy val duckExactTop3 =
+    s"""exq AS (SELECT q.vec_id AS query_id, e.vec_id,
+       |          round(${duckCos("e.embedding", "q.embedding")}, 6) + 0 AS cos_sim
+       |        FROM embeddings e, embeddings q
+       |        WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id),
+       |exr AS (SELECT query_id, vec_id,
+       |          row_number() OVER (PARTITION BY query_id
+       |            ORDER BY cos_sim DESC, vec_id) AS rank
+       |        FROM exq),
+       |ex AS (SELECT query_id, vec_id FROM exr WHERE rank <= 3),
+       |nex AS (SELECT count(*) AS n_exact FROM ex)""".stripMargin
+
+  /** Per-doc Gopher rule inputs: word, char, alphabetic-word and
+    * required-stopword counts `ta`, and the symbol count `sy`. */
+  private lazy val duckGopherStats =
+    s"""ta AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
+       |         CAST(sum(length(tok)) AS BIGINT) AS tok_chars,
+       |         CAST(sum(CASE WHEN regexp_matches(tok, '[a-z]') THEN 1 ELSE 0 END)
+       |              AS BIGINT) AS n_alpha_words,
+       |         CAST(count(DISTINCT CASE WHEN tok IN (${sqlList(graft.ops.TextOps.GopherStopwords)})
+       |                             THEN tok END) AS BIGINT) AS n_req_stopwords
+       |       FROM toks GROUP BY 1),
+       |sy AS (SELECT doc_id,
+       |         CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS BIGINT) AS n_syms
+       |       FROM documents)""".stripMargin
+
+  /** Per-doc word, syllable and sentence counts
+    * `b (doc_id, n_words, n_syllables, n_sentences)`. */
+  private lazy val duckReadabilityCounts =
+    """w AS (SELECT doc_id,
+      |    regexp_extract_all(lower(text), '[a-z]+') AS ws,
+      |    CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT) AS n_sent_raw
+      |  FROM documents),
+      |b AS (SELECT doc_id,
+      |    CAST(len(ws) AS BIGINT) AS n_words,
+      |    CAST(list_sum(list_transform(ws,
+      |      x -> greatest(len(regexp_extract_all(x, '[aeiouy]+')), 1)))
+      |      AS BIGINT) AS n_syllables,
+      |    greatest(n_sent_raw, 1) AS n_sentences
+      |  FROM w WHERE len(ws) > 0)""".stripMargin
+
+  /** Exact cosine rerank of the PQ `pcand (query_id, vec_id, qdist)`
+    * survivors, top-3 per query: `(query_id, rank, vec_id, qdist, cos_sim)`. */
+  private lazy val duckPqCosTop3 =
+    s"""prr AS (SELECT pcand.query_id, pcand.vec_id, pcand.qdist,
+       |    round(${duckCos("c.embedding", "q.embedding")}, 6) + 0 AS cos_sim
+       |  FROM pcand
+       |  JOIN embeddings c ON c.vec_id = pcand.vec_id
+       |  JOIN embeddings q ON q.vec_id = pcand.query_id)
+       |SELECT query_id, rank, vec_id, qdist, cos_sim FROM (
+       |  SELECT query_id, vec_id, qdist, cos_sim,
+       |    CAST(row_number() OVER (PARTITION BY query_id
+       |      ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
+       |  FROM prr) WHERE rank <= 3""".stripMargin
+
+  /** Docs split into 8 hashed streams and ranked longest-first per
+    * stream: `r (doc_id, n_tok, stream_id, rn)`. */
+  private lazy val duckPackBfdStreams =
+    s"""t AS (SELECT doc_id,
+       |    CAST(len(list_filter(list_transform(string_split(text, ' '), x -> trim(x)),
+       |                         x -> x <> '')) AS BIGINT) AS n_tok,
+       |    ${duckHash24("text || '|pack'")} % 8 AS stream_id
+       |  FROM documents),
+       |r AS (SELECT doc_id, n_tok, stream_id,
+       |    CAST(row_number() OVER (PARTITION BY stream_id
+       |      ORDER BY n_tok DESC, doc_id) AS BIGINT) AS rn
+       |  FROM t)""".stripMargin
+
+  /** 4-bit SRP band signatures from `pr`: `sig (vec_id, band, band_sig)`. */
+  private lazy val duckSrpBandSigs =
+    """sig AS (SELECT vec_id, out_dim // 4 AS band,
+      |          CAST(sum(CASE WHEN proj > 0
+      |            THEN 1 << CAST(out_dim % 4 AS INTEGER) ELSE 0 END) AS BIGINT)
+      |            AS band_sig
+      |        FROM pr GROUP BY 1, 2)""".stripMargin
+
+  /** Recall@3 per budget `f` of the `sq (f, query_id, vec_id)` answers
+    * against `ex`/`nex` ([[duckExactTop3]]), labelled `method`. */
+  private def duckRecallAt3(method: String): String =
+    s"""SELECT '$method' AS method, s2.f AS param,
+       |  count(*) AS n_returned,
+       |  CAST(sum(CASE WHEN e2.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+       |    AS n_hits,
+       |  nex.n_exact,
+       |  round(sum(CASE WHEN e2.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+       |        / nex.n_exact, 6) + 0 AS recall
+       |FROM sq s2
+       |LEFT JOIN ex e2 ON e2.query_id = s2.query_id AND e2.vec_id = s2.vec_id
+       |CROSS JOIN nex
+       |GROUP BY s2.f, nex.n_exact""".stripMargin
 
   /** DuckDB twin of MultimodalOps.pixelOf → imageAHash as a CTE block
     * ending in `ah (media_id, ahash)` — every pixel, the integer
@@ -832,6 +1195,12 @@ private[graft] object OracleRegistry {
       |         row_number() OVER (PARTITION BY vec_id ORDER BY cdist, c_label) AS rn
       |  FROM cd)""".stripMargin
 
+  /** [[duckSqrtCells]] plus every vector's two nearest cells:
+    * `assigned (vec_id, c_label)` (nAssign = 2). */
+  private lazy val duckSqrtCellsAssigned =
+    s"""$duckSqrtCells,
+       |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2)""".stripMargin
+
   /** [[duckSqrtCells]] trained on the BASE slice (vec_id % 10 < 8)
     * only — seeds, both Lloyd rounds and the final centroids never
     * see the batch — but with `cd`/`ranked` assigning ALL vectors
@@ -967,7 +1336,7 @@ private[graft] object OracleRegistry {
       s"""WITH $duckToks,
          |tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
          |hb AS (SELECT doc_id, tf,
-         |         CAST(${graft.functions.PortableHash.duckdbHash48("tok")} AS BIGINT) AS h
+         |         ${duckHash48("tok")} AS h
          |       FROM tf),
          |bitsum AS (
          |  SELECT doc_id, b.i AS i,
@@ -984,9 +1353,7 @@ private[graft] object OracleRegistry {
          |WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin,
     "ngram_jaccard" ->
       s"""WITH $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify
+         |$duckNearDupJaccard
          |SELECT a_id, b_id, inter, jaccard FROM jac""".stripMargin,
     // first-occurrence = min doc_id per shingle; novelty = own-first
     // fraction of the doc's distinct shingles
@@ -1141,9 +1508,7 @@ private[graft] object OracleRegistry {
          |WHERE greatest(containment_a, containment_b) >= 0.5""".stripMargin,
     "dedup_near_verified" ->
       s"""WITH $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify
+         |$duckNearDupJaccard
          |SELECT j.a_id, j.b_id, c.n_shared_bands, j.inter, j.jaccard
          |FROM jac j JOIN cand c USING (a_id, b_id)
          |WHERE j.jaccard >= 0.5""".stripMargin,
@@ -1151,9 +1516,7 @@ private[graft] object OracleRegistry {
     // e3=(a,c) — each triangle generated exactly once
     "dedup_triangles" ->
       s"""WITH $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
+         |$duckNearDupJaccard,
          |e AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
          |ne AS (SELECT count(*) AS n_edges FROM e),
          |deg AS (SELECT id, count(*) AS d
@@ -1178,17 +1541,7 @@ private[graft] object OracleRegistry {
     // the size census with exact-div density
     "dedup_cluster_density" ->
       s"""WITH RECURSIVE $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS r FROM und
-         |  UNION
-         |  SELECT u.src, reach.r FROM und u JOIN reach ON reach.id = u.dst),
-         |comp AS (SELECT id AS doc_id, min(r) AS component_id FROM reach GROUP BY 1),
+         |$duckNearDupComponents,
          |pc AS (SELECT c.component_id, CAST(count(*) AS BIGINT) AS n_edges
          |       FROM edges e JOIN comp c ON c.doc_id = e.a_id GROUP BY 1),
          |cs AS (SELECT component_id, CAST(count(*) AS BIGINT) AS size
@@ -1206,17 +1559,7 @@ private[graft] object OracleRegistry {
     // count ties cannot flake an argmax lang)
     "dedup_cluster_purity" ->
       s"""WITH RECURSIVE $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS r FROM und
-         |  UNION
-         |  SELECT u.src, reach.r FROM und u JOIN reach ON reach.id = u.dst),
-         |comp AS (SELECT id AS doc_id, min(r) AS component_id FROM reach GROUP BY 1),
+         |$duckNearDupComponents,
          |pl AS (SELECT c.component_id, d.lang, CAST(count(*) AS BIGINT) AS nl
          |       FROM comp c JOIN documents d USING (doc_id) GROUP BY 1, 2)
          |SELECT component_id, CAST(sum(nl) AS BIGINT) AS size,
@@ -1229,9 +1572,7 @@ private[graft] object OracleRegistry {
     // formula (C = 0 is the full-width row), exact integer error sums
     "minhash_bbit" ->
       s"""WITH $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
+         |$duckNearDupJaccard,
          |p AS (SELECT a_id, b_id, jaccard FROM jac WHERE jaccard >= 0.2),
          |co AS (SELECT p.a_id, p.b_id, p.jaccard,
          |         sum(CASE WHEN ma.minh = mb.minh THEN 1 ELSE 0 END) AS k24,
@@ -1265,17 +1606,7 @@ private[graft] object OracleRegistry {
     // kept ⇔ hash24('sds:'+doc_id)·10⁶ < p6·2²⁴, p6 = round(10⁶/√s)
     "soft_dedup_sample" ->
       s"""WITH RECURSIVE $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS r FROM und
-         |  UNION
-         |  SELECT u.src, reach.r FROM und u JOIN reach ON reach.id = u.dst),
-         |comp AS (SELECT id AS doc_id, min(r) AS component_id FROM reach GROUP BY 1),
+         |$duckNearDupComponents,
          |lab AS (SELECT d.doc_id, coalesce(c.component_id, d.doc_id) AS cid
          |        FROM documents d LEFT JOIN comp c USING (doc_id)),
          |sz AS (SELECT cid, CAST(count(*) AS BIGINT) AS size,
@@ -1293,16 +1624,8 @@ private[graft] object OracleRegistry {
          |FROM kk GROUP BY size, p6""".stripMargin,
     "dedup_clusters" ->
       s"""WITH RECURSIVE $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS r FROM und
-         |  UNION
-         |  SELECT u.src, reach.r FROM und u JOIN reach ON reach.id = u.dst)
+         |$duckNearDupEdges,
+         |$duckReachability
          |SELECT id AS doc_id, min(r) AS component_id FROM reach GROUP BY 1""".stripMargin,
     // bucket occupancy over exact-family representatives (GROUP BY
     // text ≡ the engine's sha2 families): the minhash/band chain over
@@ -1317,18 +1640,7 @@ private[graft] object OracleRegistry {
          |       unnest(range(1, len(parts)+1)) u(i)
          |  WHERE trim(parts[u.i]) <> ''),
          |$duckShingles,
-         |v AS (SELECT shingle, ${duckHash24("shingle")} AS h0
-         |      FROM (SELECT DISTINCT shingle FROM shd)),
-         |mh AS (
-         |  SELECT d.doc_id, s.seed,
-         |    min((((s.seed + 1) * 2654435761 % 16777259) * v.h0
-         |         + ((s.seed + 1) * 40503 + 12345) % 16777259) % 16777259) AS minh
-         |  FROM shd d JOIN v USING (shingle), unnest(range(0, 12)) s(seed)
-         |  GROUP BY 1, 2),
-         |bk AS (
-         |  SELECT doc_id, seed // 3 AS band,
-         |         string_agg(CAST(minh AS VARCHAR), '-' ORDER BY seed) AS band_sig
-         |  FROM mh GROUP BY 1, 2),
+         |$duckMinhashBands,
          |counts AS (SELECT CAST(band AS VARCHAR) || '#' || band_sig AS bucket,
          |                  count(*) AS n_rows
          |           FROM bk GROUP BY 1),
@@ -1438,22 +1750,14 @@ private[graft] object OracleRegistry {
     // per-position slicing (both engines slice by character)
     "bpe_merges" ->
       s"""WITH $duckToks,
-         |w1 AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS wc,
-         |    array_to_string(list_transform(range(1, length(tok) + 1),
-         |                                   i -> tok[i:i]), '  ') AS syms
-         |  FROM toks GROUP BY tok),
-         |${(1 to 6).map(duckBpeRound).mkString(",\n")}
+         |$duckBpeMerges6
          |SELECT CAST(merge_round AS BIGINT) AS merge_round, lhs, rhs, pair_count
          |FROM (${(1 to 6).map(r => s"SELECT * FROM t$r").mkString(" UNION ALL ")})""".stripMargin,
     // same six training rounds, then the final word table's symbol
     // histogram ranked (count desc, symbol) — top 20
     "bpe_encode" ->
       s"""WITH $duckToks,
-         |w1 AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS wc,
-         |    array_to_string(list_transform(range(1, length(tok) + 1),
-         |                                   i -> tok[i:i]), '  ') AS syms
-         |  FROM toks GROUP BY tok),
-         |${(1 to 6).map(duckBpeRound).mkString(",\n")},
+         |$duckBpeMerges6,
          |hist AS (SELECT symbol, CAST(sum(wc) AS BIGINT) AS n_occ FROM (
          |    SELECT wc, unnest(string_split(syms, '  ')) AS symbol FROM w7)
          |  GROUP BY 1)
@@ -1464,11 +1768,7 @@ private[graft] object OracleRegistry {
     // with separators removed (a word IS its symbols re-joined)
     "bpe_tokenize" ->
       s"""WITH $duckToks,
-         |w1 AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS wc,
-         |    array_to_string(list_transform(range(1, length(tok) + 1),
-         |                                   i -> tok[i:i]), '  ') AS syms
-         |  FROM toks GROUP BY tok),
-         |${(1 to 6).map(duckBpeRound).mkString(",\n")},
+         |$duckBpeMerges6,
          |enc AS (SELECT replace(syms, '  ', '') AS tok,
          |    CAST(len(string_split(syms, '  ')) AS BIGINT) AS n_syms FROM w7),
          |tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2)
@@ -1582,18 +1882,7 @@ private[graft] object OracleRegistry {
     // via the same lag-gap window; all-integer until the final ratio
     "dedup_substrings" ->
       s"""WITH $duckToks,
-         |sh8 AS (
-         |  SELECT doc_id, pos, tok || ' ' || t1 || ' ' || t2 || ' ' || t3 || ' ' ||
-         |         t4 || ' ' || t5 || ' ' || t6 || ' ' || t7 AS shingle
-         |  FROM (SELECT doc_id, pos, tok,
-         |          lead(tok, 1) OVER w AS t1, lead(tok, 2) OVER w AS t2,
-         |          lead(tok, 3) OVER w AS t3, lead(tok, 4) OVER w AS t4,
-         |          lead(tok, 5) OVER w AS t5, lead(tok, 6) OVER w AS t6,
-         |          lead(tok, 7) OVER w AS t7
-         |        FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
-         |  WHERE t7 IS NOT NULL),
-         |hh AS (SELECT doc_id, pos, ${duckHash24("shingle")} AS h FROM sh8),
-         |dup AS (SELECT h FROM hh GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+         |$duckShingle8Dups,
          |dpos AS (SELECT doc_id, pos,
          |    pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS gap
          |  FROM hh JOIN dup USING (h)),
@@ -1651,9 +1940,7 @@ private[graft] object OracleRegistry {
            |  CAST(count(DISTINCT b_id) AS BIGINT) AS n_pruned
            |FROM ver WHERE jaccard >= $t""".stripMargin
       s"""WITH $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
+         |$duckNearDupJaccard,
          |ver AS MATERIALIZED (SELECT a_id, b_id, jaccard FROM jac
          |                     WHERE jaccard >= 0.5),
          |nn AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
@@ -1677,8 +1964,7 @@ private[graft] object OracleRegistry {
         s"""SELECT CAST($tm AS BIGINT) AS threshold_micro, count(*) AS n_pairs,
            |  CAST(count(DISTINCT b_id) AS BIGINT) AS n_pruned
            |FROM sim WHERE cos_sim >= $t""".stripMargin
-      s"""WITH $duckSqrtCells,
-         |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
+      s"""WITH $duckSqrtCellsAssigned,
          |pairs AS (
          |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
          |  FROM assigned a JOIN assigned b USING (c_label)
@@ -1747,18 +2033,7 @@ private[graft] object OracleRegistry {
     // ordered string_agg
     "dedup_excise" ->
       s"""WITH $duckToks,
-         |sh8 AS (
-         |  SELECT doc_id, pos, tok || ' ' || t1 || ' ' || t2 || ' ' || t3 || ' ' ||
-         |         t4 || ' ' || t5 || ' ' || t6 || ' ' || t7 AS shingle
-         |  FROM (SELECT doc_id, pos, tok,
-         |          lead(tok, 1) OVER w AS t1, lead(tok, 2) OVER w AS t2,
-         |          lead(tok, 3) OVER w AS t3, lead(tok, 4) OVER w AS t4,
-         |          lead(tok, 5) OVER w AS t5, lead(tok, 6) OVER w AS t6,
-         |          lead(tok, 7) OVER w AS t7
-         |        FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
-         |  WHERE t7 IS NOT NULL),
-         |hh AS (SELECT doc_id, pos, ${duckHash24("shingle")} AS h FROM sh8),
-         |dup AS (SELECT h FROM hh GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+         |$duckShingle8Dups,
          |st AS (SELECT doc_id, pos FROM hh JOIN dup USING (h)),
          |stream AS (
          |  SELECT doc_id, pos, tok, 0 AS is_start FROM toks
@@ -1967,8 +2242,7 @@ private[graft] object OracleRegistry {
     // (ln(2^48) − ln(h+1), over the clamped weight, rounded once to
     // micros), ties broken by doc_id after rounding
     "weighted_sample" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'ws:' || CAST(doc_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'ws:' || CAST(doc_id AS VARCHAR)")
       s"""WITH kdf AS (SELECT doc_id, n_chars,
          |    CAST(round((ln(281474976710656.0) - ln($h48 + 1))
          |      / greatest(CAST(n_chars AS DOUBLE), 1.0) * 1000000) AS BIGINT)
@@ -2012,17 +2286,7 @@ private[graft] object OracleRegistry {
     // the readability chain + the census-boundary quantile trick;
     // staging is a boundary-count sum, ties stay together
     "curriculum_order" ->
-      """WITH w AS (SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z]+') AS ws,
-        |    CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT) AS n_sent_raw
-        |  FROM documents),
-        |b AS (SELECT doc_id,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(ws,
-        |      x -> greatest(len(regexp_extract_all(x, '[aeiouy]+')), 1)))
-        |      AS BIGINT) AS n_syllables,
-        |    greatest(n_sent_raw, 1) AS n_sentences
-        |  FROM w WHERE len(ws) > 0),
+      s"""WITH $duckReadabilityCounts,
         |rs AS (SELECT doc_id, n_words,
         |    CAST(round(round(0.39 * round(n_words / n_sentences, 6)
         |      + 11.8 * round(n_syllables / n_words, 6) - 15.59, 6) * 1000000)
@@ -2136,15 +2400,7 @@ private[graft] object OracleRegistry {
     // max fitting load; no fit → new bin (oversize docs over-fill
     // their own bin)
     "pack_bestfit" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id,
-         |    CAST(len(list_filter(list_transform(string_split(text, ' '), x -> trim(x)),
-         |                         x -> x <> '')) AS BIGINT) AS n_tok,
-         |    ${duckHash24("text || '|pack'")} % 8 AS stream_id
-         |  FROM documents),
-         |r AS (SELECT doc_id, n_tok, stream_id,
-         |    CAST(row_number() OVER (PARTITION BY stream_id
-         |      ORDER BY n_tok DESC, doc_id) AS BIGINT) AS rn
-         |  FROM t),
+      s"""WITH RECURSIVE $duckPackBfdStreams,
          |${duckBfdFold("st", "r")}
          |SELECT doc_id, stream_id, n_tok, bin_id FROM st WHERE rn >= 1""".stripMargin,
     // the same BFD recursive fold but in ARRIVAL (doc_id) order —
@@ -2165,15 +2421,7 @@ private[graft] object OracleRegistry {
     // the boundary-crossing rule, bestfit capacity floors at the
     // budget per bin (over-full oversize bins waste nothing)
     "pack_efficiency" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id,
-         |    CAST(len(list_filter(list_transform(string_split(text, ' '), x -> trim(x)),
-         |                         x -> x <> '')) AS BIGINT) AS n_tok,
-         |    ${duckHash24("text || '|pack'")} % 8 AS stream_id
-         |  FROM documents),
-         |r AS (SELECT doc_id, n_tok, stream_id,
-         |    CAST(row_number() OVER (PARTITION BY stream_id
-         |      ORDER BY n_tok DESC, doc_id) AS BIGINT) AS rn
-         |  FROM t),
+      s"""WITH RECURSIVE $duckPackBfdStreams,
          |${duckBfdFold("st", "r")},
          |c AS (SELECT doc_id, stream_id, n_tok,
          |    sum(n_tok) OVER (PARTITION BY stream_id ORDER BY doc_id
@@ -2384,7 +2632,7 @@ private[graft] object OracleRegistry {
     // wordPmi's pair CTEs feed the SAME 3-round PR unroll as
     // dedup_pagerank; top-20 on the (score desc, word) total order
     "textrank_keywords" ->
-      """WITH tk AS (SELECT list_filter(list_transform(
+      s"""WITH tk AS (SELECT list_filter(list_transform(
         |        list_slice(string_split(text, ' '), 1, 512), x -> trim(x)),
         |        x -> x <> '') AS toks FROM documents),
         |pr AS (SELECT least(toks[i], toks[i + d]) AS t1,
@@ -2395,22 +2643,7 @@ private[graft] object OracleRegistry {
         |c AS (SELECT t1, t2, count(*) AS c_xy FROM pr GROUP BY 1, 2),
         |edges AS (SELECT t1 AS a_id, t2 AS b_id FROM c
         |          WHERE c_xy >= 2 AND t1 <> t2),
-        |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-        |        UNION ALL SELECT b_id, a_id FROM edges),
-        |deg AS (SELECT src, count(*) AS deg FROM und GROUP BY 1),
-        |pr0 AS (SELECT src AS id, 1.0 AS pr FROM deg),
-        |pr1 AS (SELECT u.dst AS id,
-        |    round(0.15 + 0.85 * sum(p.pr / d.deg ORDER BY u.src), 6) + 0 AS pr
-        |  FROM und u JOIN pr0 p ON p.id = u.src JOIN deg d ON d.src = u.src
-        |  GROUP BY 1),
-        |pr2 AS (SELECT u.dst AS id,
-        |    round(0.15 + 0.85 * sum(p.pr / d.deg ORDER BY u.src), 6) + 0 AS pr
-        |  FROM und u JOIN pr1 p ON p.id = u.src JOIN deg d ON d.src = u.src
-        |  GROUP BY 1),
-        |pr3 AS (SELECT u.dst AS id,
-        |    round(0.15 + 0.85 * sum(p.pr / d.deg ORDER BY u.src), 6) + 0 AS pr
-        |  FROM und u JOIN pr2 p ON p.id = u.src JOIN deg d ON d.src = u.src
-        |  GROUP BY 1)
+        |$duckPageRank3
         |SELECT * FROM (
         |  SELECT CAST(row_number() OVER (ORDER BY pr DESC, id) AS BIGINT)
         |           AS rank, id AS word, pr AS score
@@ -2456,17 +2689,7 @@ private[graft] object OracleRegistry {
     // within (slot, bucket)
     "contrastive_batches" ->
       s"""WITH RECURSIVE $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS r FROM und
-         |  UNION
-         |  SELECT u.src, reach.r FROM und u JOIN reach ON reach.id = u.dst),
-         |comp AS (SELECT id AS doc_id, min(r) AS component_id FROM reach GROUP BY 1),
+         |$duckNearDupComponents,
          |ky AS (SELECT d.doc_id, d.text,
          |         CASE WHEN c.component_id IS NOT NULL
          |              THEN 'c|' || CAST(c.component_id AS VARCHAR)
@@ -2487,17 +2710,7 @@ private[graft] object OracleRegistry {
          |FROM rk""".stripMargin,
     "leakage_safe_split" ->
       s"""WITH RECURSIVE $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS r FROM und
-         |  UNION
-         |  SELECT u.src, reach.r FROM und u JOIN reach ON reach.id = u.dst),
-         |comp AS (SELECT id AS doc_id, min(r) AS component_id FROM reach GROUP BY 1),
+         |$duckNearDupComponents,
          |ky AS (SELECT d.doc_id,
          |         CASE WHEN c.component_id IS NOT NULL
          |              THEN 'c|' || CAST(c.component_id AS VARCHAR)
@@ -2516,16 +2729,7 @@ private[graft] object OracleRegistry {
     // arithmetic rounded once; thresholds compare the ROUNDED value
     "gopher_rules" ->
       s"""WITH $duckToks,
-         |ta AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |         CAST(sum(length(tok)) AS BIGINT) AS tok_chars,
-         |         CAST(sum(CASE WHEN regexp_matches(tok, '[a-z]') THEN 1 ELSE 0 END)
-         |              AS BIGINT) AS n_alpha_words,
-         |         CAST(count(DISTINCT CASE WHEN tok IN (${sqlList(graft.ops.TextOps.GopherStopwords)})
-         |                             THEN tok END) AS BIGINT) AS n_req_stopwords
-         |       FROM toks GROUP BY 1),
-         |sy AS (SELECT doc_id,
-         |         CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS BIGINT) AS n_syms
-         |       FROM documents),
+         |$duckGopherStats,
          |m AS (SELECT t.doc_id, n_words,
          |        round(tok_chars / n_words, 6) + 0 AS mean_word_len,
          |        round(n_alpha_words / n_words, 6) + 0 AS alpha_frac,
@@ -2576,8 +2780,7 @@ private[graft] object OracleRegistry {
     // same IVF cell chain as similarity_join, directed, label-filtered,
     // folded to each anchor's top-1 cross-label neighbor
     "hard_negatives" ->
-      s"""WITH $duckSqrtCells,
-         |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
+      s"""WITH $duckSqrtCellsAssigned,
          |cpairs AS (SELECT DISTINCT a.vec_id AS anchor_id, b.vec_id AS neg_id
          |           FROM assigned a JOIN assigned b USING (c_label)
          |           WHERE a.vec_id <> b.vec_id),
@@ -2597,8 +2800,7 @@ private[graft] object OracleRegistry {
     // one scored candidate table, two label-routed argmaxes, exact
     // on-grid margin
     "triplet_mining" ->
-      s"""WITH $duckSqrtCells,
-         |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
+      s"""WITH $duckSqrtCellsAssigned,
          |cpairs AS (SELECT DISTINCT a.vec_id AS anchor_id, b.vec_id AS other_id
          |           FROM assigned a JOIN assigned b USING (c_label)
          |           WHERE a.vec_id <> b.vec_id),
@@ -2626,8 +2828,7 @@ private[graft] object OracleRegistry {
     // corpus (vec >= 50) × benchmark (vec < 50) through the shared
     // cell table; per-corpus argmax with bench_id tie-break
     "decontaminate_semantic" ->
-      s"""WITH $duckSqrtCells,
-         |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
+      s"""WITH $duckSqrtCellsAssigned,
          |cp AS (SELECT DISTINCT a.vec_id AS corpus_id, b.vec_id AS bench_id
          |       FROM assigned a JOIN assigned b USING (c_label)
          |       WHERE a.vec_id >= 50 AND b.vec_id < 50),
@@ -2672,16 +2873,7 @@ private[graft] object OracleRegistry {
     "quality_kappa" ->
       s"""WITH $duckGdScored,
          |$duckQualityCtes,
-         |ta AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |         CAST(sum(length(tok)) AS BIGINT) AS tok_chars,
-         |         CAST(sum(CASE WHEN regexp_matches(tok, '[a-z]') THEN 1 ELSE 0 END)
-         |              AS BIGINT) AS n_alpha_words,
-         |         CAST(count(DISTINCT CASE WHEN tok IN (${sqlList(graft.ops.TextOps.GopherStopwords)})
-         |                             THEN tok END) AS BIGINT) AS n_req_stopwords
-         |       FROM toks GROUP BY 1),
-         |sy AS (SELECT doc_id,
-         |         CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS BIGINT) AS n_syms
-         |       FROM documents),
+         |$duckGopherStats,
          |m AS (SELECT t.doc_id,
          |        (n_words BETWEEN 50 AND 100000
          |         AND round(tok_chars / n_words, 6) + 0 BETWEEN 3.0 AND 10.0
@@ -2792,17 +2984,7 @@ private[graft] object OracleRegistry {
     // floored at 1, syllables = max(1, vowel-group runs) per word;
     // ratios rounded 6dp before the published linear forms
     "readability_score" ->
-      """WITH w AS (SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z]+') AS ws,
-        |    CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT) AS n_sent_raw
-        |  FROM documents),
-        |b AS (SELECT doc_id,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(ws,
-        |      x -> greatest(len(regexp_extract_all(x, '[aeiouy]+')), 1)))
-        |      AS BIGINT) AS n_syllables,
-        |    greatest(n_sent_raw, 1) AS n_sentences
-        |  FROM w WHERE len(ws) > 0),
+      s"""WITH $duckReadabilityCounts,
         |r AS (SELECT doc_id, n_words, n_sentences, n_syllables,
         |    round(n_words / n_sentences, 6) AS wps,
         |    round(n_syllables / n_words, 6) AS spw FROM b)
@@ -2841,10 +3023,7 @@ private[graft] object OracleRegistry {
     // exact integer S from pairwise signs over the daily table; the
     // tie term from the mm census; one rounded continuity-corrected z
     "mann_kendall" ->
-      """WITH daily AS (SELECT event_type,
-        |         epoch_ns(ts) // 86400000000000 AS day,
-        |         CAST(round(round(avg(value), 6) * 1000000) AS BIGINT) AS mm
-        |       FROM events GROUP BY 1, 2),
+      s"""WITH $duckDailyMeanMicros,
         |p AS (SELECT a.event_type,
         |        CAST(sum(CASE WHEN b.mm > a.mm THEN 1
         |                      WHEN b.mm < a.mm THEN -1 ELSE 0 END) AS BIGINT)
@@ -2917,10 +3096,7 @@ private[graft] object OracleRegistry {
     // complete calendar-aligned blocks only; H = Δln(R/S) over the
     // one log-2 window step, divided by the ln 2 CONSTANT
     "events_hurst" ->
-      """WITH daily AS (SELECT event_type,
-        |         epoch_ns(ts) // 86400000000000 AS day,
-        |         CAST(round(round(avg(value), 6) * 1000000) AS BIGINT) AS mm
-        |       FROM events GROUP BY 1, 2),
+      s"""WITH $duckDailyMeanMicros,
         |b4 AS (SELECT event_type, day, mm, day // 4 AS blk FROM daily),
         |t4 AS (SELECT event_type, blk, count(*) AS n,
         |         CAST(sum(mm) AS BIGINT) AS s FROM b4 GROUP BY 1, 2),
@@ -3441,37 +3617,18 @@ private[graft] object OracleRegistry {
     // mirrored by the BigDecimal-derived constant on the Spark side
     "dedup_pagerank" ->
       s"""WITH $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
-         |deg AS (SELECT src, count(*) AS deg FROM und GROUP BY 1),
-         |pr0 AS (SELECT src AS id, 1.0 AS pr FROM deg),
-         |pr1 AS (SELECT u.dst AS id,
-         |    round(0.15 + 0.85 * sum(p.pr / d.deg ORDER BY u.src), 6) + 0 AS pr
-         |  FROM und u JOIN pr0 p ON p.id = u.src JOIN deg d ON d.src = u.src
-         |  GROUP BY 1),
-         |pr2 AS (SELECT u.dst AS id,
-         |    round(0.15 + 0.85 * sum(p.pr / d.deg ORDER BY u.src), 6) + 0 AS pr
-         |  FROM und u JOIN pr1 p ON p.id = u.src JOIN deg d ON d.src = u.src
-         |  GROUP BY 1),
-         |pr3 AS (SELECT u.dst AS id,
-         |    round(0.15 + 0.85 * sum(p.pr / d.deg ORDER BY u.src), 6) + 0 AS pr
-         |  FROM und u JOIN pr2 p ON p.id = u.src JOIN deg d ON d.src = u.src
-         |  GROUP BY 1)
+         |$duckNearDupEdges,
+         |$duckPageRank3
          |SELECT id AS doc_id, pr AS pagerank FROM pr3""".stripMargin,
     // wedge candidates from the und self-join, existing edges
     // anti-joined, per-term 6dp rounding BEFORE the mid-ordered fold
     "link_prediction" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |edges AS (SELECT x.l_partkey AS a_id, y.l_partkey AS b_id
         |          FROM li x JOIN li y ON x.l_orderkey = y.l_orderkey
         |            AND x.l_partkey < y.l_partkey
         |          GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-        |        UNION ALL SELECT b_id, a_id FROM edges),
+        |$duckUndirected,
         |deg AS (SELECT src, count(*) AS deg FROM und GROUP BY 1),
         |nbr AS (SELECT u.src AS mid, u.dst, d.deg
         |        FROM und u JOIN deg d USING (src)),
@@ -3490,16 +3647,8 @@ private[graft] object OracleRegistry {
     // doc_id asc) argmax, censuses on the cluster-sized table
     "golden_record" ->
       s"""WITH RECURSIVE $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS r FROM und
-         |  UNION
-         |  SELECT u.src, reach.r FROM und u JOIN reach ON reach.id = u.dst),
+         |$duckNearDupEdges,
+         |$duckReachability,
          |comp AS (SELECT id AS doc_id, min(r) AS cluster_id
          |         FROM reach GROUP BY 1),
          |mem AS (SELECT c.cluster_id, d.doc_id, d.lang, d.source, d.n_chars
@@ -3532,12 +3681,8 @@ private[graft] object OracleRegistry {
            |          FROM und u JOIN $prev l ON l.id = u.src GROUP BY 1, 2))
            |  WHERE rn = 1)""".stripMargin
       s"""WITH $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
+         |$duckNearDupEdges,
+         |$duckUndirected,
          |l0 AS (SELECT DISTINCT src AS id, src AS label FROM und),
          |${round("l0", "l1")},
          |${round("l1", "l2")},
@@ -3560,12 +3705,8 @@ private[graft] object OracleRegistry {
            |    FROM und u JOIN $prev l ON l.id = u.dst)
            |  GROUP BY src)""".stripMargin
       s"""WITH $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
+         |$duckNearDupEdges,
+         |$duckUndirected,
          |c0 AS MATERIALIZED (SELECT src AS id, count(*) AS c FROM und GROUP BY 1),
          |${round("c0", "c1")},
          |${round("c1", "c2")},
@@ -3797,8 +3938,7 @@ private[graft] object OracleRegistry {
     // 63 * 2^48 < 2^63 so the numerator is Long-exact; // is DuckDB
     // integer div, the twin of Spark's `div`.
     "kmv_distinct" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'kmv:' || CAST(user_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'kmv:' || CAST(user_id AS VARCHAR)")
       s"""WITH h AS (SELECT DISTINCT event_type, $h48 AS h FROM events),
          |r AS (SELECT event_type, h,
          |        row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn,
@@ -3885,10 +4025,7 @@ private[graft] object OracleRegistry {
     // closed-form dyadic weights in HUGEINT; arg_max last day,
     // pmod-floored divisions mirror the engine exactly
     "events_ewma" ->
-      """WITH daily AS (SELECT event_type,
-        |         epoch_ns(ts) // 86400000000000 AS day,
-        |         CAST(round(round(avg(value), 6) * 1000000) AS BIGINT) AS mm
-        |       FROM events GROUP BY 1, 2),
+      s"""WITH $duckDailyMeanMicros,
         |bd AS (SELECT event_type, max(day) AS d1 FROM daily GROUP BY 1),
         |rk AS (SELECT d.event_type, d.day, d.mm,
         |         row_number() OVER (PARTITION BY d.event_type
@@ -3960,10 +4097,7 @@ private[graft] object OracleRegistry {
     // one window spec serves all four rank builtins; unique (mm, day)
     // ordering keeps the fractions exact rationals on both engines
     "events_rank_profile" ->
-      """WITH daily AS (SELECT event_type,
-        |         epoch_ns(ts) // 86400000000000 AS day,
-        |         CAST(round(round(avg(value), 6) * 1000000) AS BIGINT) AS mm
-        |       FROM events GROUP BY 1, 2)
+      s"""WITH $duckDailyMeanMicros
         |SELECT event_type, day, mm,
         |  round(percent_rank() OVER w, 6) + 0 AS pr,
         |  round(cume_dist() OVER w, 6) + 0 AS cd,
@@ -3989,10 +4123,7 @@ private[graft] object OracleRegistry {
     // full-contiguous-week MA window, floored per-dow means, strength
     // = 1 - sum|resid|/sum|det| floored and clamped at 0
     "seasonal_decompose" ->
-      """WITH daily AS (SELECT event_type,
-        |         epoch_ns(ts) // 86400000000000 AS day,
-        |         CAST(round(round(avg(value), 6) * 1000000) AS BIGINT) AS mm
-        |       FROM events GROUP BY 1, 2),
+      s"""WITH $duckDailyMeanMicros,
         |win AS (SELECT *,
         |         count(*) OVER w7 AS wn,
         |         max(day) OVER w7 - min(day) OVER w7 AS wspan,
@@ -4129,8 +4260,7 @@ private[graft] object OracleRegistry {
     // per-m legs share the hash; register index = top log2(m) bits,
     // rank = (48-p+1) - bitlength(remainder); alpha literals shared
     "hll_error_curve" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'hll:' || CAST(user_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'hll:' || CAST(user_id AS VARCHAR)")
       def leg(m: Int, p: Int, alpha: String): String = {
         val rbits = 48 - p
         val maxRho = rbits + 1
@@ -4180,9 +4310,7 @@ private[graft] object OracleRegistry {
       s"""WITH $duckToks,
          |$duckQualityCtes,
          |$duckLangCtes,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
+         |$duckNearDupJaccard,
          |tc AS (SELECT doc_id,
          |  CAST(len(list_filter(list_transform(string_split(text, ' '),
          |                                      t -> trim(t)),
@@ -4213,11 +4341,7 @@ private[graft] object OracleRegistry {
     // full-outer reconciliation against the tokenize census
     "tokenizer_roundtrip" ->
       s"""WITH $duckToks,
-         |w1 AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS wc,
-         |    array_to_string(list_transform(range(1, length(tok) + 1),
-         |                                   i -> tok[i:i]), '  ') AS syms
-         |  FROM toks GROUP BY tok),
-         |${(1 to 6).map(duckBpeRound).mkString(",\n")},
+         |$duckBpeMerges6,
          |cen AS (SELECT tok, count(*) AS n FROM toks GROUP BY 1),
          |dec AS (SELECT replace(syms, '  ', '') AS tok, wc FROM w7),
          |j AS (SELECT cen.n, dec.wc
@@ -4381,8 +4505,7 @@ private[graft] object OracleRegistry {
     // retained-set intersection under the shared theta; under-filled
     // sides contribute theta = 2^48 (they are their full sets)
     "kmv_intersect" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'kmv:' || CAST(user_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'kmv:' || CAST(user_id AS VARCHAR)")
       s"""WITH ua AS (SELECT DISTINCT user_id FROM events
          |            WHERE event_type = 'view'),
          |ub AS (SELECT DISTINCT user_id FROM events
@@ -4525,8 +4648,7 @@ private[graft] object OracleRegistry {
     // day-wise bottom-k tiers replayed by rank windows; merged list
     // vs whole-period list compared element-for-element
     "kmv_union" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'kmv:' || CAST(user_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'kmv:' || CAST(user_id AS VARCHAR)")
       s"""WITH h AS (SELECT DISTINCT event_type,
          |        epoch_ns(ts) // 86400000000000 AS day, $h48 AS h
          |      FROM events),
@@ -4559,8 +4681,7 @@ private[graft] object OracleRegistry {
     // reciprocal sum as the exact 2^(43−M) numerator; branch on the
     // once-rounded raw estimate so both engines take the same arm
     "hll_distinct" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'hll:' || CAST(user_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'hll:' || CAST(user_id AS VARCHAR)")
       s"""WITH hh AS (SELECT DISTINCT event_type, $h48 AS h FROM events),
          |rr AS (SELECT event_type, h // 4398046511104 AS idx,
          |         h % 4398046511104 AS r2 FROM hh),
@@ -4595,8 +4716,7 @@ private[graft] object OracleRegistry {
     // the whole-stream register table (idx-sorted struct lists), with
     // the merged-register estimate beside it
     "hll_union" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'hll:' || CAST(user_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'hll:' || CAST(user_id AS VARCHAR)")
       s"""WITH hh AS (SELECT DISTINCT event_type,
          |        epoch_ns(ts) // 86400000000000 AS day, $h48 AS h FROM events),
          |rr AS (SELECT event_type, day, h // 4398046511104 AS idx,
@@ -4686,8 +4806,7 @@ private[graft] object OracleRegistry {
     // are the sample (the aggregator's exact contract); type-1 ranks
     // via integer (n*pct + 99) // 100 on both engines
     "quantile_sketch" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'qsk:' || CAST(event_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'qsk:' || CAST(event_id AS VARCHAR)")
       s"""WITH hv AS (SELECT event_type, event_id,
          |        CAST(round(value * 1000000) AS BIGINT) AS v_mu, $h48 AS h
          |      FROM events),
@@ -4720,8 +4839,7 @@ private[graft] object OracleRegistry {
     // of the bottom-256 pair sample, rows routed by counting
     // boundaries strictly below, balance = frac·parts
     "range_boundaries" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'rb:' || CAST(event_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'rb:' || CAST(event_id AS VARCHAR)")
       s"""WITH hv AS (SELECT CAST(round(value * 1000000) AS BIGINT) AS v_mu,
          |        $h48 AS h
          |      FROM events),
@@ -4753,8 +4871,7 @@ private[graft] object OracleRegistry {
     // same kernel swept over k ∈ {16, 64, 256}, collapsed to the
     // error curve (the cms_error_curve discipline)
     "quantile_error_curve" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'qsk:' || CAST(event_id AS VARCHAR)")} AS BIGINT)"
+      val h48 = duckHash48("'qsk:' || CAST(event_id AS VARCHAR)")
       s"""WITH hv AS (SELECT event_type, event_id,
          |        CAST(round(value * 1000000) AS BIGINT) AS v_mu, $h48 AS h
          |      FROM events),
@@ -4802,8 +4919,7 @@ private[graft] object OracleRegistry {
     // probe budget mirrors VectorOps.probePolicy: nAssign = 2,
     // nProbe = greatest(3, ceil(cells/16)) with cells = k from kk
     "ann_ivf" ->
-      s"""WITH $duckSqrtCells,
-         |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
+      s"""WITH $duckSqrtCellsAssigned,
          |probes AS (SELECT vec_id AS query_id, c_label FROM ranked
          |           WHERE rn <= greatest(3, CAST(ceil((SELECT k FROM kk) / 16.0) AS BIGINT))
          |             AND vec_id < 10),
@@ -4813,41 +4929,14 @@ private[graft] object OracleRegistry {
          |  SELECT DISTINCT p.query_id, a.vec_id
          |  FROM probes p JOIN assigned a USING (c_label)
          |  WHERE a.vec_id <> p.query_id),
-         |scored AS (
-         |  SELECT c.query_id, c.vec_id,
-         |    round(${duckCos("e.embedding", "q.embedding")}, 6) + 0 AS cos_sim
-         |  FROM cand c
-         |  JOIN embeddings e ON e.vec_id = c.vec_id
-         |  JOIN embeddings q ON q.vec_id = c.query_id),
-         |r AS (SELECT query_id, vec_id, cos_sim,
-         |        row_number() OVER (PARTITION BY query_id
-         |          ORDER BY cos_sim DESC, vec_id) AS rank
-         |      FROM scored)
-         |SELECT query_id, rank, vec_id, cos_sim FROM r WHERE rank <= 3""".stripMargin,
+         |$duckCellCosTop3""".stripMargin,
     // the full-rebuild twin: base-trained codebook, ALL vectors
     // assigned — equality with the engine's merged incremental index
     // IS the merged ≡ rebuild receipt
     "ann_incremental" ->
       s"""WITH $duckSqrtCellsIncr,
          |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
-         |probes AS (SELECT vec_id AS query_id, c_label FROM ranked
-         |           WHERE rn <= greatest(3, CAST(ceil((SELECT k FROM kk) / 16.0) AS BIGINT))
-         |             AND vec_id < 10),
-         |cand AS (
-         |  SELECT DISTINCT p.query_id, a.vec_id
-         |  FROM probes p JOIN assigned a USING (c_label)
-         |  WHERE a.vec_id <> p.query_id),
-         |scored AS (
-         |  SELECT c.query_id, c.vec_id,
-         |    round(${duckCos("e.embedding", "q.embedding")}, 6) + 0 AS cos_sim
-         |  FROM cand c
-         |  JOIN embeddings e ON e.vec_id = c.vec_id
-         |  JOIN embeddings q ON q.vec_id = c.query_id),
-         |r AS (SELECT query_id, vec_id, cos_sim,
-         |        row_number() OVER (PARTITION BY query_id
-         |          ORDER BY cos_sim DESC, vec_id) AS rank
-         |      FROM scored)
-         |SELECT query_id, rank, vec_id, cos_sim FROM r WHERE rank <= 3""".stripMargin,
+         |$duckIvfProbeTop3""".stripMargin,
     // same CTEs as ann_ivf with the label predicate applied to the
     // ASSIGNED side only (queries and codebook untouched) — the
     // pre-filter semantics mirrored exactly
@@ -4856,24 +4945,7 @@ private[graft] object OracleRegistry {
          |assigned AS (SELECT r.vec_id, r.c_label FROM ranked r
          |             JOIN embeddings e USING (vec_id)
          |             WHERE r.rn <= 2 AND e.label % 2 = 0),
-         |probes AS (SELECT vec_id AS query_id, c_label FROM ranked
-         |           WHERE rn <= greatest(3, CAST(ceil((SELECT k FROM kk) / 16.0) AS BIGINT))
-         |             AND vec_id < 10),
-         |cand AS (
-         |  SELECT DISTINCT p.query_id, a.vec_id
-         |  FROM probes p JOIN assigned a USING (c_label)
-         |  WHERE a.vec_id <> p.query_id),
-         |scored AS (
-         |  SELECT c.query_id, c.vec_id,
-         |    round(${duckCos("e.embedding", "q.embedding")}, 6) + 0 AS cos_sim
-         |  FROM cand c
-         |  JOIN embeddings e ON e.vec_id = c.vec_id
-         |  JOIN embeddings q ON q.vec_id = c.query_id),
-         |r AS (SELECT query_id, vec_id, cos_sim,
-         |        row_number() OVER (PARTITION BY query_id
-         |          ORDER BY cos_sim DESC, vec_id) AS rank
-         |      FROM scored)
-         |SELECT query_id, rank, vec_id, cos_sim FROM r WHERE rank <= 3""".stripMargin,
+         |$duckIvfProbeTop3""".stripMargin,
     // the refresh census: the stale chain IS duckSqrtCellsIncr
     // (base-trained, all vectors ranked); the refreshed chain is the
     // same Lloyd unroll n-prefixed, trained on the FULL corpus and
@@ -4939,22 +5011,9 @@ private[graft] object OracleRegistry {
          |           ORDER BY cos_sim DESC, vec_id) AS rank
          |       FROM scored),
          |ivf AS (SELECT p, query_id, vec_id FROM rr WHERE rank <= 3),
-         |exq AS (SELECT q.vec_id AS query_id, e.vec_id,
-         |          round(${duckCos("e.embedding", "q.embedding")}, 6) + 0 AS cos_sim
-         |        FROM embeddings e, embeddings q
-         |        WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id),
-         |exr AS (SELECT query_id, vec_id,
-         |          row_number() OVER (PARTITION BY query_id
-         |            ORDER BY cos_sim DESC, vec_id) AS rank
-         |        FROM exq),
-         |ex AS (SELECT query_id, vec_id FROM exr WHERE rank <= 3),
-         |nex AS (SELECT count(*) AS n_exact FROM ex),
+         |$duckExactTop3,
          |${duckSrp(32)},
-         |sig AS (SELECT vec_id, out_dim // 4 AS band,
-         |          CAST(sum(CASE WHEN proj > 0
-         |            THEN 1 << CAST(out_dim % 4 AS INTEGER) ELSE 0 END) AS BIGINT)
-         |            AS band_sig
-         |        FROM pr GROUP BY 1, 2),
+         |$duckSrpBandSigs,
          |sbp AS (SELECT CAST(unnest([2, 4, 8]) AS BIGINT) AS b),
          |spairs AS (SELECT q.vec_id AS query_id, s.vec_id,
          |             min(q.band) AS first_band
@@ -4997,19 +5056,7 @@ private[graft] object OracleRegistry {
     // int8 code ranks once at the largest budget, per-factor rerank
     // filters, exact ground truth — the ann_recall tail on the sq8 leg
     "ann_recall_quantized" ->
-      s"""WITH s AS (
-         |  SELECT max(greatest(abs(CAST(list_min(embedding) AS DOUBLE)),
-         |                      abs(CAST(list_max(embedding) AS DOUBLE)))) AS qs
-         |  FROM embeddings),
-         |qz AS (SELECT vec_id,
-         |         list_transform(embedding, x ->
-         |           CAST(round(CAST(x AS DOUBLE) * 127.0 / s.qs) AS BIGINT)) AS qc
-         |       FROM embeddings, s),
-         |cd AS (SELECT q.vec_id AS query_id, c.vec_id,
-         |         CAST(list_sum(list_transform(range(1, len(c.qc)+1),
-         |           i -> (c.qc[i] - q.qc[i]) * (c.qc[i] - q.qc[i]))) AS BIGINT) AS qdist
-         |       FROM qz c, qz q
-         |       WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),
+      s"""WITH $duckInt8Distances,
          |cand AS (SELECT query_id, vec_id,
          |           row_number() OVER (PARTITION BY query_id
          |             ORDER BY qdist, vec_id) AS qrank
@@ -5025,27 +5072,8 @@ private[graft] object OracleRegistry {
          |           ORDER BY r.cos_sim DESC, r.vec_id) AS rank
          |       FROM rr r JOIN pf ON r.qrank <= 3 * pf.f),
          |sq AS (SELECT f, query_id, vec_id FROM rk WHERE rank <= 3),
-         |exq AS (SELECT q.vec_id AS query_id, e.vec_id,
-         |          round(${duckCos("e.embedding", "q.embedding")}, 6) + 0 AS cos_sim
-         |        FROM embeddings e, embeddings q
-         |        WHERE q.vec_id < 10 AND e.vec_id <> q.vec_id),
-         |exr AS (SELECT query_id, vec_id,
-         |          row_number() OVER (PARTITION BY query_id
-         |            ORDER BY cos_sim DESC, vec_id) AS rank
-         |        FROM exq),
-         |ex AS (SELECT query_id, vec_id FROM exr WHERE rank <= 3),
-         |nex AS (SELECT count(*) AS n_exact FROM ex)
-         |SELECT 'sq8' AS method, s2.f AS param,
-         |  count(*) AS n_returned,
-         |  CAST(sum(CASE WHEN e2.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_hits,
-         |  nex.n_exact,
-         |  round(sum(CASE WHEN e2.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |        / nex.n_exact, 6) + 0 AS recall
-         |FROM sq s2
-         |LEFT JOIN ex e2 ON e2.query_id = s2.query_id AND e2.vec_id = s2.vec_id
-         |CROSS JOIN nex
-         |GROUP BY s2.f, nex.n_exact""".stripMargin,
+         |$duckExactTop3
+         |${duckRecallAt3("sq8")}""".stripMargin,
     // prefix-dim cosine top-k vs the full-dim exact ground truth —
     // one scored pass carries every prefix cosine, per-dim ranks
     "matryoshka_recall" ->
@@ -5161,12 +5189,7 @@ private[graft] object OracleRegistry {
       s"""WITH $duckToks,
          |$duckShingles,
          |$duckLshCand,
-         |hashed AS (SELECT doc_id, ${duckHash24("tok")} % 65536 AS dim FROM toks),
-         |tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
-         |       FROM hashed GROUP BY 1, 2),
-         |nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM tf GROUP BY 1),
-         |w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
-         |      FROM tf t JOIN nrm n USING (doc_id))
+         |${duckSparseWeights("", 65536)}
          |SELECT c.a_id, c.b_id,
          |       round(sum(a.weight * b.weight ORDER BY a.dim), 6) + 0 AS cos_sim
          |FROM cand c
@@ -5178,16 +5201,9 @@ private[graft] object OracleRegistry {
     // full-outer-joined; floor-quotient agreement in micros
     "dedup_tier_agreement" ->
       s"""WITH $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
+         |$duckNearDupJaccard,
          |mhpairs AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |hashed AS (SELECT doc_id, ${duckHash24("tok")} % 65536 AS dim FROM toks),
-         |tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
-         |       FROM hashed GROUP BY 1, 2),
-         |nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM tf GROUP BY 1),
-         |w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
-         |      FROM tf t JOIN nrm n USING (doc_id)),
+         |${duckSparseWeights("", 65536)},
          |em AS (SELECT c.a_id, c.b_id
          |       FROM cand c
          |       JOIN w a ON a.doc_id = c.a_id
@@ -5356,8 +5372,7 @@ private[graft] object OracleRegistry {
         |FROM st, unnest([500000, 1000000, 2000000]) u(e)""".stripMargin,
     "dp_counts" -> {
       def leg(ei: Int, eps: String): String = {
-        val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-          s"'dp$ei:' || event_type")} AS BIGINT)"
+        val h48 = duckHash48(s"'dp$ei:' || event_type")
         s"""SELECT CAST($eps AS DOUBLE) AS epsilon, event_type, n_true, noise,
            |  round(n_true + noise, 6) + 0 AS n_noisy
            |FROM (SELECT event_type, n_true,
@@ -5378,8 +5393,7 @@ private[graft] object OracleRegistry {
     // grid weights (exp underflow to exactly 0 on both engines),
     // first census value whose cumulative mass reaches u·total
     "dp_quantile" -> {
-      val h48 = s"CAST(${graft.functions.PortableHash.duckdbHash48(
-        "'dpq:' || event_type")} AS BIGINT)"
+      val h48 = duckHash48("'dpq:' || event_type")
       s"""WITH census AS (SELECT event_type,
          |    CAST(round(value * 100) AS BIGINT) AS cents,
          |    CAST(count(*) AS BIGINT) AS cnt
@@ -5442,20 +5456,7 @@ private[graft] object OracleRegistry {
         |    AND level = (SELECT chosen_level FROM ch) AS chosen
         |FROM lad""".stripMargin,
     "l_diversity" ->
-      """WITH tc AS (SELECT user_id, event_type, count(*) AS n_t
-        |            FROM events GROUP BY 1, 2),
-        |tt AS (SELECT user_id, event_type AS top_type FROM (
-        |         SELECT user_id, event_type,
-        |           row_number() OVER (PARTITION BY user_id
-        |             ORDER BY n_t DESC, event_type) AS rn
-        |         FROM tc) WHERE rn = 1),
-        |pr AS (SELECT user_id, count(*) AS n_ev,
-        |         count(DISTINCT epoch_ns(ts) // 86400000000000) AS n_days
-        |       FROM events GROUP BY 1),
-        |prof AS (SELECT user_id,
-        |           least(10, n_ev // 10) AS activity_bucket,
-        |           least(10, n_days // 3) AS days_bucket
-        |         FROM pr)
+      s"""WITH $duckUserProfile
         |SELECT p.activity_bucket, p.days_bucket,
         |       count(*) AS k,
         |       CAST(count(DISTINCT t.top_type) AS BIGINT) AS l_distinct,
@@ -5465,20 +5466,7 @@ private[graft] object OracleRegistry {
     // exact integer TVD on the class×type spine: |cnt·gn − g·k|
     // summed, floor-quotient micros, no float anywhere
     "t_closeness" ->
-      """WITH tc AS (SELECT user_id, event_type, count(*) AS n_t
-        |            FROM events GROUP BY 1, 2),
-        |tt AS (SELECT user_id, event_type AS top_type FROM (
-        |         SELECT user_id, event_type,
-        |           row_number() OVER (PARTITION BY user_id
-        |             ORDER BY n_t DESC, event_type) AS rn
-        |         FROM tc) WHERE rn = 1),
-        |pr AS (SELECT user_id, count(*) AS n_ev,
-        |         count(DISTINCT epoch_ns(ts) // 86400000000000) AS n_days
-        |       FROM events GROUP BY 1),
-        |prof AS (SELECT user_id,
-        |           least(10, n_ev // 10) AS activity_bucket,
-        |           least(10, n_days // 3) AS days_bucket
-        |         FROM pr),
+      s"""WITH $duckUserProfile,
         |u AS (SELECT p.activity_bucket, p.days_bucket, t.top_type
         |      FROM prof p JOIN tt t USING (user_id)),
         |gl AS (SELECT top_type, count(*) AS g FROM u GROUP BY 1),
@@ -5587,10 +5575,7 @@ private[graft] object OracleRegistry {
     // doubled ranks on both axes (distinct days, census-averaged
     // values); five exact Long sums, one rounded division
     "spearman_trend" ->
-      """WITH daily AS (SELECT event_type,
-        |         epoch_ns(ts) // 86400000000000 AS day,
-        |         CAST(round(round(avg(value), 6) * 1000000) AS BIGINT) AS mm
-        |       FROM events GROUP BY 1, 2),
+      s"""WITH $duckDailyMeanMicros,
         |cen AS (SELECT event_type, mm, count(*) AS c FROM daily GROUP BY 1, 2),
         |yr AS (SELECT event_type, mm,
         |         2 * CAST(coalesce(sum(c) OVER (PARTITION BY event_type
@@ -5623,10 +5608,7 @@ private[graft] object OracleRegistry {
     // doubled-median sign filter (exact-median days dropped), one
     // lag for the run count, z from exact (n1, n2, R)
     "runs_test" ->
-      """WITH daily AS (SELECT event_type,
-        |         epoch_ns(ts) // 86400000000000 AS day,
-        |         CAST(round(round(avg(value), 6) * 1000000) AS BIGINT) AS mm
-        |       FROM events GROUP BY 1, 2),
+      s"""WITH $duckDailyMeanMicros,
         |cen AS (SELECT event_type, mm, count(*) AS c FROM daily GROUP BY 1, 2),
         |cum AS (SELECT *, sum(c) OVER (PARTITION BY event_type ORDER BY mm
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
@@ -6082,10 +6064,7 @@ private[graft] object OracleRegistry {
         |FROM fr""".stripMargin,
     // pmod-floored slope micros, doubled median over the rank window
     "theil_sen_trend" ->
-      """WITH daily AS (SELECT event_type,
-        |         epoch_ns(ts) // 86400000000000 AS day,
-        |         CAST(round(round(avg(value), 6) * 1000000) AS BIGINT) AS mm
-        |       FROM events GROUP BY 1, 2),
+      s"""WITH $duckDailyMeanMicros,
         |pr AS (SELECT a.event_type, b.mm - a.mm AS num, b.day - a.day AS den
         |       FROM daily a JOIN daily b ON a.event_type = b.event_type
         |         AND a.day < b.day),
@@ -6138,20 +6117,7 @@ private[graft] object OracleRegistry {
         |  ch.chi2, ch.chi2 <= 15.507313 AS benford_ok
         |FROM c CROSS JOIN ch""".stripMargin,
     "k_anonymity" ->
-      """WITH tc AS (SELECT user_id, event_type, count(*) AS n_t
-        |            FROM events GROUP BY 1, 2),
-        |tt AS (SELECT user_id, event_type AS top_type FROM (
-        |         SELECT user_id, event_type,
-        |           row_number() OVER (PARTITION BY user_id
-        |             ORDER BY n_t DESC, event_type) AS rn
-        |         FROM tc) WHERE rn = 1),
-        |pr AS (SELECT user_id, count(*) AS n_ev,
-        |         count(DISTINCT epoch_ns(ts) // 86400000000000) AS n_days
-        |       FROM events GROUP BY 1),
-        |prof AS (SELECT user_id,
-        |           least(10, n_ev // 10) AS activity_bucket,
-        |           least(10, n_days // 3) AS days_bucket
-        |         FROM pr),
+      s"""WITH $duckUserProfile,
         |cls AS (SELECT p.activity_bucket, t.top_type, p.days_bucket,
         |          count(*) AS k
         |        FROM prof p JOIN tt t USING (user_id) GROUP BY 1, 2, 3),
@@ -6542,17 +6508,7 @@ private[graft] object OracleRegistry {
     // census self-joined; containment by exact integer div
     "source_overlap" ->
       s"""WITH RECURSIVE $duckToks,
-         |$duckShingles,
-         |$duckLshCand,
-         |$duckJaccardVerify,
-         |edges AS (SELECT a_id, b_id FROM jac WHERE jaccard >= 0.5),
-         |und AS (SELECT a_id AS src, b_id AS dst FROM edges
-         |        UNION ALL SELECT b_id, a_id FROM edges),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS r FROM und
-         |  UNION
-         |  SELECT u.src, reach.r FROM und u JOIN reach ON reach.id = u.dst),
-         |comp AS (SELECT id AS doc_id, min(r) AS component_id FROM reach GROUP BY 1),
+         |$duckNearDupComponents,
          |fam AS (SELECT coalesce(c.component_id, d.doc_id) AS h, d.source,
          |          count(*) AS n
          |        FROM documents d LEFT JOIN comp c USING (doc_id) GROUP BY 1, 2),
@@ -6726,23 +6682,7 @@ private[graft] object OracleRegistry {
     // relevance-argmax seed
     "search_mmr" ->
       s"""WITH $duckToks,
-         |q_toks AS (SELECT trim(u.tok) AS tok
-         |           FROM unnest(string_split('spark merge sort join', ' ')) u(tok)
-         |           WHERE trim(u.tok) <> ''),
-         |ct_hashed AS (SELECT doc_id, ${duckHash24("tok")} % 64 AS dim FROM toks),
-         |ct_tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
-         |          FROM ct_hashed GROUP BY 1, 2),
-         |ct_nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM ct_tf GROUP BY 1),
-         |ct_w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
-         |         FROM ct_tf t JOIN ct_nrm n USING (doc_id)),
-         |ct_qh AS (SELECT ${duckHash24("tok")} % 64 AS dim FROM q_toks),
-         |ct_qtf AS (SELECT dim, CAST(count(*) AS DOUBLE) AS cnt FROM ct_qh GROUP BY 1),
-         |ct_qw AS (SELECT dim,
-         |            round(cnt / (SELECT sqrt(sum(cnt*cnt)) FROM ct_qtf), 6) + 0 AS qw
-         |          FROM ct_qtf),
-         |ct_scored AS (
-         |  SELECT w.doc_id, round(sum(w.weight * qw.qw ORDER BY dim), 6) + 0 AS score
-         |  FROM ct_w w JOIN ct_qw qw USING (dim) GROUP BY 1),
+         |$duckMergeSortCosine,
          |cand AS MATERIALIZED (
          |  SELECT doc_id, score AS rel,
          |         CAST(round(score * 1000000.0) AS BIGINT) AS rel_micro
@@ -6794,23 +6734,7 @@ private[graft] object OracleRegistry {
     // bm_ BM25 / mx_ maxsim), then the RRF fold over their top-20s
     "search_rrf" ->
       s"""WITH $duckToks,
-         |q_toks AS (SELECT trim(u.tok) AS tok
-         |           FROM unnest(string_split('spark merge sort join', ' ')) u(tok)
-         |           WHERE trim(u.tok) <> ''),
-         |ct_hashed AS (SELECT doc_id, ${duckHash24("tok")} % 64 AS dim FROM toks),
-         |ct_tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
-         |          FROM ct_hashed GROUP BY 1, 2),
-         |ct_nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM ct_tf GROUP BY 1),
-         |ct_w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
-         |         FROM ct_tf t JOIN ct_nrm n USING (doc_id)),
-         |ct_qh AS (SELECT ${duckHash24("tok")} % 64 AS dim FROM q_toks),
-         |ct_qtf AS (SELECT dim, CAST(count(*) AS DOUBLE) AS cnt FROM ct_qh GROUP BY 1),
-         |ct_qw AS (SELECT dim,
-         |            round(cnt / (SELECT sqrt(sum(cnt*cnt)) FROM ct_qtf), 6) + 0 AS qw
-         |          FROM ct_qtf),
-         |ct_scored AS (
-         |  SELECT w.doc_id, round(sum(w.weight * qw.qw ORDER BY dim), 6) + 0 AS score
-         |  FROM ct_w w JOIN ct_qw qw USING (dim) GROUP BY 1),
+         |$duckMergeSortCosine,
          |ct_ranked AS (SELECT doc_id,
          |                row_number() OVER (ORDER BY score DESC, doc_id) AS rnk
          |              FROM ct_scored),
@@ -6928,49 +6852,17 @@ private[graft] object OracleRegistry {
          |ORDER BY sc.score DESC, sc.doc_id LIMIT 10""".stripMargin,
     "search_text" ->
       s"""WITH $duckToks,
-         |hashed AS (SELECT doc_id, ${duckHash24("tok")} % 64 AS dim FROM toks),
-         |tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
-         |       FROM hashed GROUP BY 1, 2),
-         |nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM tf GROUP BY 1),
-         |w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
-         |      FROM tf t JOIN nrm n USING (doc_id)),
-         |qtoks AS (SELECT trim(u.tok) AS tok
-         |          FROM unnest(string_split('spark vector hash join', ' ')) u(tok)
-         |          WHERE trim(u.tok) <> ''),
-         |qhashed AS (SELECT ${duckHash24("tok")} % 64 AS dim FROM qtoks),
-         |qtf AS (SELECT dim, CAST(count(*) AS DOUBLE) AS cnt FROM qhashed GROUP BY 1),
-         |qw AS (SELECT dim, round(cnt / (SELECT sqrt(sum(cnt*cnt)) FROM qtf), 6) + 0 AS qw
-         |       FROM qtf),
-         |scored AS (
-         |  SELECT w.doc_id, round(sum(w.weight * qw.qw ORDER BY dim), 6) + 0 AS score
-         |  FROM w JOIN qw USING (dim) GROUP BY 1)
-         |SELECT rank, doc_id, source, score FROM (
-         |  SELECT s.doc_id, s.score, d.source,
-         |    row_number() OVER (ORDER BY s.score DESC, s.doc_id) AS rank
-         |  FROM scored s JOIN documents d USING (doc_id))
-         |WHERE rank <= 10""".stripMargin,
+         |${duckSparseWeights("", 64)},
+         |$duckTextQueryScored
+         |$duckTopTenScored""".stripMargin,
     // the lifecycle composed: search_text's CTE chain at k=5, the
     // keyword_topn CTEs (from duckTopn, inlined below the search
     // CTEs), first-seen distinct keyed (hit_rank, kw_rank), the
     // assemble_prompt prefix — one row per hit plus the prompt
     "proposal_flow" ->
       s"""$duckTopn,
-         |hashed AS (SELECT doc_id, ${duckHash24("tok")} % 64 AS dim FROM toks),
-         |tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
-         |       FROM hashed GROUP BY 1, 2),
-         |nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM tf GROUP BY 1),
-         |w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
-         |      FROM tf t JOIN nrm n USING (doc_id)),
-         |qtoks AS (SELECT trim(u.tok) AS tok
-         |          FROM unnest(string_split('spark vector hash join', ' ')) u(tok)
-         |          WHERE trim(u.tok) <> ''),
-         |qhashed AS (SELECT ${duckHash24("tok")} % 64 AS dim FROM qtoks),
-         |qtf AS (SELECT dim, CAST(count(*) AS DOUBLE) AS cnt FROM qhashed GROUP BY 1),
-         |qw AS (SELECT dim, round(cnt / (SELECT sqrt(sum(cnt*cnt)) FROM qtf), 6) + 0 AS qw
-         |       FROM qtf),
-         |scored AS (
-         |  SELECT w.doc_id, round(sum(w.weight * qw.qw ORDER BY dim), 6) + 0 AS score
-         |  FROM w JOIN qw USING (dim) GROUP BY 1),
+         |${duckSparseWeights("", 64)},
+         |$duckTextQueryScored,
          |hits AS (SELECT hit_rank, doc_id, source, score FROM (
          |  SELECT s.doc_id, s.score, d.source,
          |    row_number() OVER (ORDER BY s.score DESC, s.doc_id) AS hit_rank
@@ -6993,21 +6885,12 @@ private[graft] object OracleRegistry {
     // the query side, self excluded
     "more_like_this" ->
       s"""WITH $duckToks,
-         |hashed AS (SELECT doc_id, ${duckHash24("tok")} % 64 AS dim FROM toks),
-         |tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
-         |       FROM hashed GROUP BY 1, 2),
-         |nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM tf GROUP BY 1),
-         |w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
-         |      FROM tf t JOIN nrm n USING (doc_id)),
+         |${duckSparseWeights("", 64)},
          |qw AS (SELECT dim, weight AS qw FROM w WHERE doc_id = 42),
          |scored AS (
          |  SELECT w.doc_id, round(sum(w.weight * qw.qw ORDER BY dim), 6) + 0 AS score
          |  FROM w JOIN qw USING (dim) WHERE w.doc_id <> 42 GROUP BY 1)
-         |SELECT rank, doc_id, source, score FROM (
-         |  SELECT s.doc_id, s.score, d.source,
-         |    row_number() OVER (ORDER BY s.score DESC, s.doc_id) AS rank
-         |  FROM scored s JOIN documents d USING (doc_id))
-         |WHERE rank <= 10""".stripMargin,
+         |$duckTopTenScored""".stripMargin,
     // stride-4 starts over the compacted token list; inclusive list
     // slice mirrors Spark's slice(toks, start, 8)
     "chunk_overlap" ->
@@ -7084,37 +6967,13 @@ private[graft] object OracleRegistry {
          |      AS score
          |  FROM tf JOIN dfc USING (tok) JOIN lens USING (doc_id), nd, stats
          |  GROUP BY 1)
-         |SELECT rank, doc_id, source, score FROM (
-         |  SELECT s.doc_id, s.score, d.source,
-         |    row_number() OVER (ORDER BY s.score DESC, s.doc_id) AS rank
-         |  FROM scored s JOIN documents d USING (doc_id))
-         |WHERE rank <= 10""".stripMargin,
+         |$duckTopTenScored""".stripMargin,
     // the search_bm25 chain with queries drawn from the keyword
     // table (duckTopn): per (query_doc, doc) term-ordered fold, the
     // positive excluded, top-5 per query
     "bm25_hard_negatives" ->
       s"""$duckTopn,
-         |qt AS (SELECT doc_id AS query_doc, keyword AS tok FROM topn
-         |       WHERE doc_id < 10 AND rank <= 3),
-         |lens AS (SELECT doc_id, count(*) AS len_d FROM toks GROUP BY 1),
-         |stats AS (SELECT avg(len_d) AS avg_len FROM lens),
-         |nd AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs
-         |       FROM documents),
-         |tf AS (SELECT t.doc_id, t.tok, count(*) AS tf
-         |       FROM toks t JOIN (SELECT DISTINCT tok FROM qt) q USING (tok)
-         |       GROUP BY 1, 2),
-         |dfc AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-         |scored AS (
-         |  SELECT qt.query_doc, tf.doc_id,
-         |    round(sum(ln((nd.n_docs - dfc.df + 0.5) / (dfc.df + 0.5) + 1)
-         |      * (tf.tf * 2.2)
-         |      / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * lens.len_d / stats.avg_len))
-         |      ORDER BY tf.tok), 6) + 0
-         |      AS score
-         |  FROM tf JOIN qt USING (tok) JOIN dfc USING (tok)
-         |       JOIN lens USING (doc_id), nd, stats
-         |  WHERE tf.doc_id <> qt.query_doc
-         |  GROUP BY 1, 2)
+         |$duckBm25HardNegScored
          |SELECT query_doc, rank, doc_id AS neg_id, score FROM (
          |  SELECT query_doc, doc_id, score,
          |    CAST(row_number() OVER (PARTITION BY query_doc
@@ -7133,34 +6992,13 @@ private[graft] object OracleRegistry {
          |      AS q_start
          |  FROM lt l JOIN documents d USING (doc_id)
          |  WHERE len(arr) > 8 AND l.doc_id < 10),
-         |qt AS (SELECT doc_id AS query_doc, keyword AS tok FROM topn
-         |       WHERE doc_id < 10 AND rank <= 3),
-         |lens AS (SELECT doc_id, count(*) AS len_d FROM toks GROUP BY 1),
-         |stats AS (SELECT avg(len_d) AS avg_len FROM lens),
-         |nd AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs
-         |       FROM documents),
-         |tf AS (SELECT t.doc_id, t.tok, count(*) AS tf
-         |       FROM toks t JOIN (SELECT DISTINCT tok FROM qt) q USING (tok)
-         |       GROUP BY 1, 2),
-         |dfc AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-         |scored AS (
-         |  SELECT qt.query_doc, tf.doc_id,
-         |    round(sum(ln((nd.n_docs - dfc.df + 0.5) / (dfc.df + 0.5) + 1)
-         |      * (tf.tf * 2.2)
-         |      / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * lens.len_d / stats.avg_len))
-         |      ORDER BY tf.tok), 6) + 0
-         |      AS score
-         |  FROM tf JOIN qt USING (tok) JOIN dfc USING (tok)
-         |       JOIN lens USING (doc_id), nd, stats
-         |  WHERE tf.doc_id <> qt.query_doc
-         |  GROUP BY 1, 2),
+         |$duckBm25HardNegScored,
          |lex AS (SELECT query_doc AS anchor_id, neg_id FROM (
          |  SELECT query_doc, doc_id AS neg_id, score,
          |    row_number() OVER (PARTITION BY query_doc
          |      ORDER BY score DESC, doc_id) AS rank
          |  FROM scored) WHERE rank <= 5),
-         |$duckSqrtCells,
-         |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
+         |$duckSqrtCellsAssigned,
          |cpairs AS (SELECT DISTINCT a.vec_id AS anchor_id, b.vec_id AS other_id
          |           FROM assigned a JOIN assigned b USING (c_label)
          |           WHERE a.vec_id <> b.vec_id),
@@ -7210,12 +7048,7 @@ private[graft] object OracleRegistry {
     // terms, one normalizing division; cosine_self must emit 1.0
     "ndcg_audit" ->
       s"""WITH $duckToks,
-         |ct_hashed AS (SELECT doc_id, ${duckHash24("tok")} % 64 AS dim FROM toks),
-         |ct_tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
-         |          FROM ct_hashed GROUP BY 1, 2),
-         |ct_nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM ct_tf GROUP BY 1),
-         |ct_w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
-         |         FROM ct_tf t JOIN ct_nrm n USING (doc_id)),
+         |${duckSparseWeights("ct_", 64)},
          |ct_qt AS (SELECT trim(u.tok) AS tok
          |          FROM unnest(string_split('spark vector hash join', ' ')) u(tok)
          |          WHERE trim(u.tok) <> ''),
@@ -7276,22 +7109,8 @@ private[graft] object OracleRegistry {
     // HUGEINT; Spark's window sum stays BIGINT)
     "context_pack" ->
       s"""WITH $duckToks,
-         |hashed AS (SELECT doc_id, ${duckHash24("tok")} % 64 AS dim FROM toks),
-         |tf AS (SELECT doc_id, dim, CAST(count(*) AS DOUBLE) AS cnt
-         |       FROM hashed GROUP BY 1, 2),
-         |nrm AS (SELECT doc_id, sqrt(sum(cnt*cnt)) AS nrm FROM tf GROUP BY 1),
-         |w AS (SELECT t.doc_id, t.dim, round(t.cnt / n.nrm, 6) + 0 AS weight
-         |      FROM tf t JOIN nrm n USING (doc_id)),
-         |qtoks AS (SELECT trim(u.tok) AS tok
-         |          FROM unnest(string_split('spark vector hash join', ' ')) u(tok)
-         |          WHERE trim(u.tok) <> ''),
-         |qhashed AS (SELECT ${duckHash24("tok")} % 64 AS dim FROM qtoks),
-         |qtf AS (SELECT dim, CAST(count(*) AS DOUBLE) AS cnt FROM qhashed GROUP BY 1),
-         |qw AS (SELECT dim, round(cnt / (SELECT sqrt(sum(cnt*cnt)) FROM qtf), 6) + 0 AS qw
-         |       FROM qtf),
-         |scored AS (
-         |  SELECT w.doc_id, round(sum(w.weight * qw.qw ORDER BY dim), 6) + 0 AS score
-         |  FROM w JOIN qw USING (dim) GROUP BY 1),
+         |${duckSparseWeights("", 64)},
+         |$duckTextQueryScored,
          |ranked AS (
          |  SELECT rank, doc_id, score FROM (
          |    SELECT s.doc_id, s.score,
@@ -7373,19 +7192,7 @@ private[graft] object OracleRegistry {
     // int8 scalar quantization: one global symmetric scale, integer
     // code distances pick 12 candidates/query, exact cosine reranks
     "ann_quantized" ->
-      s"""WITH s AS (
-         |  SELECT max(greatest(abs(CAST(list_min(embedding) AS DOUBLE)),
-         |                      abs(CAST(list_max(embedding) AS DOUBLE)))) AS qs
-         |  FROM embeddings),
-         |qz AS (SELECT vec_id,
-         |         list_transform(embedding, x ->
-         |           CAST(round(CAST(x AS DOUBLE) * 127.0 / s.qs) AS BIGINT)) AS qc
-         |       FROM embeddings, s),
-         |cd AS (SELECT q.vec_id AS query_id, c.vec_id,
-         |         CAST(list_sum(list_transform(range(1, len(c.qc)+1),
-         |           i -> (c.qc[i] - q.qc[i]) * (c.qc[i] - q.qc[i]))) AS BIGINT) AS qdist
-         |       FROM qz c, qz q
-         |       WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),
+      s"""WITH $duckInt8Distances,
          |cand AS (SELECT query_id, vec_id, qdist FROM (
          |           SELECT query_id, vec_id, qdist,
          |             row_number() OVER (PARTITION BY query_id
@@ -7414,19 +7221,7 @@ private[graft] object OracleRegistry {
            |  SELECT dim, round(w / n$i.nrm, 6) + 0 AS v FROM w$i, n$i)""".stripMargin
       val rounds = (1 to 8).map(i => round(if (i == 1) "v0" else s"v${i - 1}", i))
         .mkString(",\n")
-      s"""WITH x AS (SELECT vec_id, CAST(u.ii - 1 AS BIGINT) AS dim,
-         |        CAST(round(CAST(embedding[u.ii] AS DOUBLE) * 1000000) AS BIGINT)
-         |          AS x6
-         |      FROM embeddings, unnest(range(1, len(embedding)+1)) u(ii)),
-         |mu AS (SELECT dim, CAST(round(avg(x6)) AS BIGINT) AS mu6
-         |       FROM x GROUP BY 1),
-         |dx AS MATERIALIZED (SELECT vec_id, dim, x6 - mu6 AS dx
-         |      FROM x JOIN mu USING (dim)),
-         |cov AS MATERIALIZED (
-         |  SELECT a.dim AS di, b.dim AS dj, CAST(sum(a.dx * b.dx) AS BIGINT) AS c
-         |  FROM dx a JOIN dx b USING (vec_id) GROUP BY 1, 2),
-         |v0 AS (SELECT DISTINCT di AS dim,
-         |         CASE WHEN di = 0 THEN 1.0 ELSE 0.0 END AS v FROM cov),
+      s"""WITH $duckCenteredCov,
          |$rounds,
          |wf AS (SELECT c.di AS dim, sum(CAST(c.c AS DOUBLE) * v.v ORDER BY c.dj) AS w
          |       FROM cov c JOIN v8 v ON v.dim = c.dj GROUP BY 1),
@@ -7451,19 +7246,7 @@ private[graft] object OracleRegistry {
            |  SELECT dim, round(w / n$i.nrm, 6) + 0 AS v FROM w$i, n$i)""".stripMargin
       val rounds = (1 to 8).map(i => round(if (i == 1) "v0" else s"v${i - 1}", i))
         .mkString(",\n")
-      s"""WITH x AS (SELECT vec_id, CAST(u.ii - 1 AS BIGINT) AS dim,
-         |        CAST(round(CAST(embedding[u.ii] AS DOUBLE) * 1000000) AS BIGINT)
-         |          AS x6
-         |      FROM embeddings, unnest(range(1, len(embedding)+1)) u(ii)),
-         |mu AS (SELECT dim, CAST(round(avg(x6)) AS BIGINT) AS mu6
-         |       FROM x GROUP BY 1),
-         |dx AS MATERIALIZED (SELECT vec_id, dim, x6 - mu6 AS dx
-         |      FROM x JOIN mu USING (dim)),
-         |cov AS MATERIALIZED (
-         |  SELECT a.dim AS di, b.dim AS dj, CAST(sum(a.dx * b.dx) AS BIGINT) AS c
-         |  FROM dx a JOIN dx b USING (vec_id) GROUP BY 1, 2),
-         |v0 AS (SELECT DISTINCT di AS dim,
-         |         CASE WHEN di = 0 THEN 1.0 ELSE 0.0 END AS v FROM cov),
+      s"""WITH $duckCenteredCov,
          |$rounds
          |SELECT d.vec_id,
          |  round(sum(CAST(d.dx AS DOUBLE) / 1000000.0 * v.v ORDER BY d.dim), 6)
@@ -7524,11 +7307,7 @@ private[graft] object OracleRegistry {
     // bucket equi-join candidates, exact-cosine rerank top-3
     "ann_srp_multiprobe" ->
       s"""WITH ${duckSrp(32)},
-         |sig AS (SELECT vec_id, out_dim // 4 AS band,
-         |          CAST(sum(CASE WHEN proj > 0
-         |            THEN 1 << CAST(out_dim % 4 AS INTEGER) ELSE 0 END) AS BIGINT)
-         |            AS band_sig
-         |        FROM pr GROUP BY 1, 2),
+         |$duckSrpBandSigs,
          |fb AS (SELECT vec_id, band, CAST(out_dim % 4 AS INTEGER) AS flip_pos
          |       FROM (SELECT vec_id, out_dim, out_dim // 4 AS band,
          |               row_number() OVER (PARTITION BY vec_id, out_dim // 4
@@ -7544,36 +7323,14 @@ private[graft] object OracleRegistry {
          |cand AS (SELECT DISTINCT p.query_id, s.vec_id
          |         FROM probes p JOIN sig s USING (band, band_sig)
          |         WHERE s.vec_id <> p.query_id),
-         |rr AS (SELECT cand.query_id, cand.vec_id,
-         |         round(${duckCos("c.embedding", "q.embedding")}, 6) + 0 AS cos_sim
-         |       FROM cand
-         |       JOIN embeddings c ON c.vec_id = cand.vec_id
-         |       JOIN embeddings q ON q.vec_id = cand.query_id)
-         |SELECT query_id, rank, vec_id, cos_sim FROM (
-         |  SELECT query_id, vec_id, cos_sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-         |  FROM rr) WHERE rank <= 3""".stripMargin,
+         |$duckSrpCosTop3""".stripMargin,
     "ann_srp" ->
       s"""WITH ${duckSrp(32)},
-         |sig AS (SELECT vec_id, out_dim // 4 AS band,
-         |          CAST(sum(CASE WHEN proj > 0
-         |            THEN 1 << CAST(out_dim % 4 AS INTEGER) ELSE 0 END) AS BIGINT)
-         |            AS band_sig
-         |        FROM pr GROUP BY 1, 2),
+         |$duckSrpBandSigs,
          |cand AS (SELECT DISTINCT q.vec_id AS query_id, s.vec_id
          |         FROM sig q JOIN sig s USING (band, band_sig)
          |         WHERE q.vec_id < 10 AND s.vec_id <> q.vec_id),
-         |rr AS (SELECT cand.query_id, cand.vec_id,
-         |         round(${duckCos("c.embedding", "q.embedding")}, 6) + 0 AS cos_sim
-         |       FROM cand
-         |       JOIN embeddings c ON c.vec_id = cand.vec_id
-         |       JOIN embeddings q ON q.vec_id = cand.query_id)
-         |SELECT query_id, rank, vec_id, cos_sim FROM (
-         |  SELECT query_id, vec_id, cos_sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-         |  FROM rr) WHERE rank <= 3""".stripMargin,
+         |$duckSrpCosTop3""".stripMargin,
     // PQ/ADC: per-subspace Lloyd (seeds = first-16 subvectors, 2
     // rounds, subspace rides every grouping key), encode with the
     // final codebooks, ADC = per-query (s, code) partial distances
@@ -7584,13 +7341,7 @@ private[graft] object OracleRegistry {
          |         CAST(embedding[u.i] AS DOUBLE) AS x
          |  FROM embeddings, unnest(range(1, len(embedding)+1)) u(i)),
          |psd AS (SELECT vec_id, dim // 8 AS s, dim % 8 AS ld, x FROM pdims),
-         |pqc0 AS (SELECT s, vec_id AS code, ld, round(x, 6) + 0 AS cv
-         |         FROM psd WHERE vec_id < 16),
-         |${duckPqAssign(1, "pqc0")},
-         |${duckPqUpdate(1)},
-         |${duckPqAssign(2, "pqc1")},
-         |${duckPqUpdate(2)},
-         |${duckPqAssign(3, "pqc2")},
+         |$duckPqTrain,
          |qlut AS (SELECT q.vec_id AS query_id, c.s, c.code,
          |    round(sum((q.x - c.cv)^2 ORDER BY q.ld), 6) + 0 AS pd
          |  FROM psd q JOIN pqc2 c ON c.s = q.s AND c.ld = q.ld
@@ -7604,16 +7355,7 @@ private[graft] object OracleRegistry {
          |      row_number() OVER (PARTITION BY query_id
          |        ORDER BY qdist, vec_id) AS qrank
          |    FROM padc) WHERE qrank <= 48),
-         |prr AS (SELECT pcand.query_id, pcand.vec_id, pcand.qdist,
-         |    round(${duckCos("c.embedding", "q.embedding")}, 6) + 0 AS cos_sim
-         |  FROM pcand
-         |  JOIN embeddings c ON c.vec_id = pcand.vec_id
-         |  JOIN embeddings q ON q.vec_id = pcand.query_id)
-         |SELECT query_id, rank, vec_id, qdist, cos_sim FROM (
-         |  SELECT query_id, vec_id, qdist, cos_sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-         |  FROM prr) WHERE rank <= 3""".stripMargin,
+         |$duckPqCosTop3""".stripMargin,
     // residual IVFADC: the shared ADC chain (coarse cells -> primary
     // residuals -> PQ unroll -> per-cell query LUTs) picks 48/query,
     // exact cosine decides
@@ -7677,29 +7419,12 @@ private[graft] object OracleRegistry {
          |        FROM exq),
          |ex AS (SELECT query_id, vec_id FROM exr WHERE rank <= 3),
          |nex AS (SELECT count(*) AS n_exact FROM ex)
-         |SELECT 'ivfpq' AS method, s2.f AS param,
-         |  count(*) AS n_returned,
-         |  CAST(sum(CASE WHEN e2.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_hits,
-         |  nex.n_exact,
-         |  round(sum(CASE WHEN e2.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |        / nex.n_exact, 6) + 0 AS recall
-         |FROM sq s2
-         |LEFT JOIN ex e2 ON e2.query_id = s2.query_id AND e2.vec_id = s2.vec_id
-         |CROSS JOIN nex
-         |GROUP BY s2.f, nex.n_exact""".stripMargin,
+         |${duckRecallAt3("ivfpq")}""".stripMargin,
     // composed funnel: IVF candidate chain (same CTEs as ann_ivf) ->
     // int8 code distances pick 12/query -> exact cosine rerank
     "ann_ivf_quantized" ->
       s"""WITH $duckSqrtCells,
-         |s AS (
-         |  SELECT max(greatest(abs(CAST(list_min(embedding) AS DOUBLE)),
-         |                      abs(CAST(list_max(embedding) AS DOUBLE)))) AS qs
-         |  FROM embeddings),
-         |qz AS (SELECT vec_id,
-         |         list_transform(embedding, x ->
-         |           CAST(round(CAST(x AS DOUBLE) * 127.0 / s.qs) AS BIGINT)) AS qc
-         |       FROM embeddings, s),
+         |$duckInt8Codes,
          |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
          |probes AS (SELECT vec_id AS query_id, c_label FROM ranked
          |           WHERE rn <= greatest(3, CAST(ceil((SELECT k FROM kk) / 16.0) AS BIGINT))
@@ -7733,8 +7458,7 @@ private[graft] object OracleRegistry {
     // chain as ann_ivf), nAssign=2 multi-assignment, exact cosine
     // only on co-resident pairs
     "similarity_join" ->
-      s"""WITH $duckSqrtCells,
-         |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
+      s"""WITH $duckSqrtCellsAssigned,
          |pairs AS (
          |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
          |  FROM assigned a JOIN assigned b USING (c_label)
@@ -7823,8 +7547,7 @@ private[graft] object OracleRegistry {
     // same pair chain as similarity_join, folded to the per-vector
     // keep/prune verdict (min smaller similar id = representative)
     "semantic_dedup" ->
-      s"""WITH $duckSqrtCells,
-         |assigned AS (SELECT vec_id, c_label FROM ranked WHERE rn <= 2),
+      s"""WITH $duckSqrtCellsAssigned,
          |cpairs AS (
          |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
          |  FROM assigned a JOIN assigned b USING (c_label)

@@ -1426,9 +1426,7 @@ object SparkEntry {
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_annincr_" +
         s.sparkContext.applicationId
       cent.write.mode("overwrite").parquet(s"$tmp/cent")
-      VectorOps.cellRanks(base, cent, "vec_id")
-        .filter(col("cell_rank") <= nAssign)
-        .select(col("vec_id"), col("c_label"))
+      VectorOps.nearestCells(base, cent, "vec_id", nAssign)
         .write.mode("overwrite").parquet(s"$tmp/assigned")
       cleanupOnExit(tmp)
       VectorOps.ivfIncrementalTopK(emb, emb.filter(col("vec_id") < 10),

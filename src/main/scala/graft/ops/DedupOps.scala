@@ -203,9 +203,6 @@ object DedupOps {
   /** Distinct-shingle count per doc — doubles as the "has a MinHash
     * signature at all" eligibility gate (a doc below w tokens has no
     * shingles, hence no signature, no buckets, no pairs). */
-  private def shingleCounts(docs: DataFrame, w: Int): DataFrame =
-    shingleCountsFromShingles(distinctShingles(docs, w))
-
   private def shingleCountsFromShingles(sh: DataFrame): DataFrame =
     sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
 

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorMath.roundn
+import graft.functions.VectorMath.{orderedSum, roundn}
 
 /** The reference's search entry point end-to-end (SURVEY.md §3.2):
   * free-text query → embed → score every corpus document → ranked
@@ -27,29 +27,38 @@ object SearchOps {
     val queryW = EmbedOps
       .embedSparse(Seq((-1L, queryText)).toDF("doc_id", "text"), dim)
       .select(col("dim"), col("weight").as("qw"))
-    val scored = corpusW
+    rankTopK(sparseCosine(corpusW, queryW), docs, k)
+  }
+
+  /** Sparse cosine of every corpus doc against the broadcast query
+    * weights `(dim, qw)`: unit-norm weights ⇒ the dot over shared dims,
+    * folded in dim order (run-stable float sum, see
+    * VectorMath.orderedSum) → `(doc_id, score)`. */
+  private def sparseCosine(corpusW: DataFrame, queryW: DataFrame): DataFrame =
+    corpusW
       .join(broadcast(queryW), "dim")
       .groupBy(col("doc_id"))
-      // dim-ordered sequential fold — run-stable float sum (see
-      // VectorMath.orderedSum)
-      .agg(roundn(graft.functions.VectorMath.orderedSum(
-        col("dim"), col("weight") * col("qw")), 6).as("score"))
-    // orderBy.limit FIRST (plans as TakeOrderedAndProject — per-
-    // partition top-k, no global single-reducer sort); the window
-    // then ranks only the ≤k survivors, so its single-partition
-    // shape is intended (WindowExec's blanket warning is silenced at
-    // the logger in the entry points — a constant partition key
-    // can't do it, EliminateWindowPartitions folds it away)
-    val top = scored
+      .agg(roundn(orderedSum(col("dim"), col("weight") * col("qw")), 6).as("score"))
+
+  /** The ranked top-k tail of the search family: attach `source`, keep
+    * the `k` best rows by `order` and number them 1..k in that order,
+    * emitting `(rank, doc_id, source, out...)`.
+    *
+    * orderBy.limit FIRST (plans as TakeOrderedAndProject — per-
+    * partition top-k, no global single-reducer sort); the window
+    * then ranks only the ≤k survivors, so its single-partition
+    * shape is intended (WindowExec's blanket warning is silenced at
+    * the logger in the entry points — a constant partition key
+    * can't do it, EliminateWindowPartitions folds it away). */
+  private def rankTopK(scored: DataFrame, docs: DataFrame, k: Int,
+                       order: Seq[Column] = Seq(col("score").desc, col("doc_id")),
+                       out: Seq[String] = Seq("score")): DataFrame =
+    scored
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .orderBy(col("score").desc, col("doc_id"))
+      .orderBy(order: _*)
       .limit(k)
-    top
-      .withColumn(
-        "rank",
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("source"), col("score"))
-  }
+      .withColumn("rank", row_number().over(Window.orderBy(order: _*)).cast("long"))
+      .select((Seq("rank", "doc_id", "source") ++ out).map(col): _*)
 
   /** The reference's full search→proposal lifecycle as ONE composed
     * query (app_callapi.py:196-243, the last undeclared lifecycle
@@ -109,20 +118,7 @@ object SearchOps {
     val corpusW = EmbedOps.embedSparse(docs, dim)
     val queryW = corpusW.filter(col("doc_id") === seedDocId)
       .select(col("dim"), col("weight").as("qw"))
-    val scored = corpusW
-      .filter(col("doc_id") =!= seedDocId)
-      .join(broadcast(queryW), "dim")
-      .groupBy(col("doc_id"))
-      .agg(roundn(graft.functions.VectorMath.orderedSum(
-        col("dim"), col("weight") * col("qw")), 6).as("score"))
-    val top = scored
-      .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-    top
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("source"), col("score"))
+    rankTopK(sparseCosine(corpusW.filter(col("doc_id") =!= seedDocId), queryW), docs, k)
   }
 
   /** BM25 ranked retrieval (Robertson/Lucene form) — the lexical
@@ -141,13 +137,30 @@ object SearchOps {
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val toks = EmbedOps.tokenize(docs)
     val qTerms = queryText.split(" ").map(_.trim).filter(_.nonEmpty).distinct.toSeq
-    val lens = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("len_d"))
-    val avgLen = lens.agg(avg(col("len_d")).as("avg_len"))
-    val nDocs = docs.agg(countDistinct(col("doc_id")).cast("double").as("n_docs"))
+    val (lens, avgLen, nDocs) = bm25DocStats(toks, docs)
     val tf = toks.filter(col("tok").isin(qTerms: _*))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val scored = tf
+    rankTopK(bm25Scores(tf, df, lens, nDocs, avgLen, k1, b, col("doc_id")), docs, k)
+  }
+
+  /** Per-doc BM25 statistics from a token stream: `(lens (doc_id,
+    * len_d), avgLen (avg_len), nDocs (n_docs))`, the last two 1-row. */
+  private def bm25DocStats(toks: DataFrame,
+                           docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val lens = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("len_d"))
+    (lens, lens.agg(avg(col("len_d")).as("avg_len")),
+      docs.agg(countDistinct(col("doc_id")).cast("double").as("n_docs")))
+  }
+
+  /** The BM25 formula over `(…, doc_id, tok, tf)` postings: idf from
+    * the broadcast per-term `df`, the per-term contribution, then the
+    * term-ordered sequential fold (run-stable float sum) per `keys`,
+    * rounded once → `(keys…, score)`. */
+  private def bm25Scores(postings: DataFrame, df: DataFrame, lens: DataFrame,
+                         nDocs: DataFrame, avgLen: DataFrame, k1: Double, b: Double,
+                         keys: Column*): DataFrame =
+    postings
       .join(broadcast(df), "tok")
       .join(lens, "doc_id")
       .crossJoin(broadcast(nDocs))
@@ -156,20 +169,8 @@ object SearchOps {
       .withColumn("contrib",
         col("idf") * (col("tf") * (k1 + 1)) /
           (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("len_d") / col("avg_len"))))
-      .groupBy(col("doc_id"))
-      // term-ordered sequential fold — run-stable float sum
-      .agg(roundn(graft.functions.VectorMath.orderedSum(
-        col("tok"), col("contrib")), 6).as("score"))
-    val top = scored
-      .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-    top
-      .withColumn(
-        "rank",
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("source"), col("score"))
-  }
+      .groupBy(keys: _*)
+      .agg(roundn(orderedSum(col("tok"), col("contrib")), 6).as("score"))
 
   /** Lexical hard negatives — the DPR training-data recipe
     * (Karpukhin et al., EMNLP'20: the strongest negatives for a dense
@@ -196,26 +197,13 @@ object SearchOps {
       .select(col("doc_id").as("query_doc"), col("keyword").as("tok"))
       .localCheckpoint(false)
     val toks = EmbedOps.tokenize(docs)
-    val lens = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("len_d"))
-    val avgLen = lens.agg(avg(col("len_d")).as("avg_len"))
-    val nDocs = docs.agg(countDistinct(col("doc_id")).cast("double").as("n_docs"))
+    val (lens, avgLen, nDocs) = bm25DocStats(toks, docs)
     val tf = toks.join(broadcast(qt.select(col("tok")).distinct()), "tok")
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val scored = tf
-      .join(broadcast(qt), "tok")
-      .filter(col("doc_id") =!= col("query_doc"))
-      .join(broadcast(df), "tok")
-      .join(lens, "doc_id")
-      .crossJoin(broadcast(nDocs))
-      .crossJoin(broadcast(avgLen))
-      .withColumn("idf", log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1))
-      .withColumn("contrib",
-        col("idf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("len_d") / col("avg_len"))))
-      .groupBy(col("query_doc"), col("doc_id"))
-      .agg(roundn(graft.functions.VectorMath.orderedSum(
-        col("tok"), col("contrib")), 6).as("score"))
+    val postings = tf.join(broadcast(qt), "tok").filter(col("doc_id") =!= col("query_doc"))
+    val scored = bm25Scores(postings, df, lens, nDocs, avgLen, k1, b,
+      col("query_doc"), col("doc_id"))
     val w = Window.partitionBy(col("query_doc"))
       .orderBy(col("score").desc, col("doc_id"))
     scored
@@ -224,7 +212,7 @@ object SearchOps {
       .select(col("query_doc"), col("rank"), col("doc_id").as("neg_id"), col("score"))
   }
 
-  /** The CONTRASTIVE DATASET CAPSTONE (r14 verdict #6) — the DPR
+  /** The CONTRASTIVE DATASET CAPSTONE — the DPR
     * training-set funnel composed from the three pinned kernels:
     * [[graft.ops.TextOps.ictPairs]] supplies each anchor's (query,
     * positive) — the unsupervised ORQA objective; [[bm25HardNegatives]]
@@ -251,27 +239,21 @@ object SearchOps {
                            centroids: Option[DataFrame] = None): DataFrame = {
     // the three mining legs are independent job chains over different
     // substrates (token windows / BM25 postings / embedding cells) —
-    // materialize them from three threads so their jobs overlap and
-    // stragglers back-fill (guide §2.6); EAGER checkpoints here, since
-    // each thread's job is the materialization itself. Output order
-    // and values are unchanged — the composition below reads the same
-    // three tables whichever leg finishes first.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val ictF = Future(TextOps.ictPairs(docs).filter(col("doc_id") < nAnchors)
-      .select(col("doc_id").as("anchor_id"), col("q_start"))
-      .localCheckpoint(true))
-    val lexF = Future(bm25HardNegatives(docs, nQueries = nAnchors)
-      .select(col("query_doc").as("anchor_id"), col("neg_id"))
-      .localCheckpoint(true))
-    val denseF = Future(VectorOps.tripletMining(emb, centroids = centroids)
-      .filter(col("anchor_id") < nAnchors)
-      .select(col("anchor_id"), col("pos_id"), col("neg_id"), col("margin"))
-      .localCheckpoint(true))
-    val ict = Await.result(ictF, Duration.Inf)
-    val lex = Await.result(lexF, Duration.Inf)
-    val dense = Await.result(denseF, Duration.Inf)
+    // materialize them as parallel legs so their jobs overlap; EAGER
+    // checkpoints here, since each leg's job is the materialization
+    // itself. The composition below reads the same three tables
+    // whichever leg finishes first.
+    val Seq(ict, lex, dense) = Legs.run(
+      () => TextOps.ictPairs(docs).filter(col("doc_id") < nAnchors)
+        .select(col("doc_id").as("anchor_id"), col("q_start"))
+        .localCheckpoint(true),
+      () => bm25HardNegatives(docs, nQueries = nAnchors)
+        .select(col("query_doc").as("anchor_id"), col("neg_id"))
+        .localCheckpoint(true),
+      () => VectorOps.tripletMining(emb, centroids = centroids)
+        .filter(col("anchor_id") < nAnchors)
+        .select(col("anchor_id"), col("pos_id"), col("neg_id"), col("margin"))
+        .localCheckpoint(true))
     val complete = ict.select(col("anchor_id")).distinct()
       .join(lex.select(col("anchor_id")).distinct(), "anchor_id")
       .join(dense.select(col("anchor_id")).distinct(), "anchor_id")
@@ -330,27 +312,7 @@ object SearchOps {
     val nDocs = index.agg(countDistinct(col("doc_id")).cast("double").as("n_docs"))
     val tf = index.filter(col("tok").isin(qTerms: _*))
     val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val scored = tf
-      .join(broadcast(df), "tok")
-      .join(lens, "doc_id")
-      .crossJoin(broadcast(nDocs))
-      .crossJoin(broadcast(avgLen))
-      .withColumn("idf", log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1))
-      .withColumn("contrib",
-        col("idf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("len_d") / col("avg_len"))))
-      .groupBy(col("doc_id"))
-      .agg(roundn(graft.functions.VectorMath.orderedSum(
-        col("tok"), col("contrib")), 6).as("score"))
-    val top = scored
-      .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-    top
-      .withColumn(
-        "rank",
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("source"), col("score"))
+    rankTopK(bm25Scores(tf, df, lens, nDocs, avgLen, k1, b, col("doc_id")), docs, k)
   }
 
   /** Positional-index phrase search — exact "quoted phrase" retrieval
@@ -384,15 +346,7 @@ object SearchOps {
         Seq("doc_id", "seq"))
     }
     val counted = matches.groupBy(col("doc_id")).agg(count(lit(1)).as("n_matches"))
-    val top = counted
-      .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .orderBy(col("n_matches").desc, col("doc_id"))
-      .limit(k)
-    top
-      .withColumn(
-        "rank",
-        row_number().over(Window.orderBy(col("n_matches").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("source"), col("n_matches"))
+    rankTopK(counted, docs, k, Seq(col("n_matches").desc, col("doc_id")), Seq("n_matches"))
   }
 
   /** Proximity (NEAR/k) search — the retrieval operator between
@@ -422,12 +376,8 @@ object SearchOps {
       .filter(abs(col("sa") - col("sb")) <= maxGap && col("sa") =!= col("sb"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_pairs"), min(abs(col("sa") - col("sb"))).as("min_gap"))
-    scored
-      .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .orderBy(col("n_pairs").desc, col("min_gap"), col("doc_id")).limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("n_pairs").desc, col("min_gap"), col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("source"), col("n_pairs"), col("min_gap"))
+    rankTopK(scored, docs, k, Seq(col("n_pairs").desc, col("min_gap"), col("doc_id")),
+      Seq("n_pairs", "min_gap"))
   }
 
   /** Token-budget context packing — the retrieval→prompt step of the
@@ -523,11 +473,7 @@ object SearchOps {
       .groupBy(col("doc_id"))
       .agg(roundn(graft.functions.VectorMath.orderedSum(
         col("tok"), col("tf") * col("w")), 6).as("score"))
-    scored.join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("source"), col("score"))
+    rankTopK(scored, docs, k)
   }
 
   /** Per-token char-trigram hashed vector (tok, tdim, w): trigrams
@@ -597,11 +543,7 @@ object SearchOps {
       .groupBy(col("doc_id"))
       .agg(roundn(graft.functions.VectorMath.orderedSum(
         col("qtok"), col("best")), 6).as("score"))
-    scored.join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("source"), col("score"))
+    rankTopK(scored, docs, k)
   }
 
   /** Maximal-marginal-relevance re-ranking (Carbonell & Goldstein
@@ -743,11 +685,7 @@ object SearchOps {
       .agg(count(lit(1)).as("n_lists"),
         roundn(graft.functions.VectorMath.orderedSum(
           col("ranker"), col("contrib")), 6).as("rrf"))
-    fused.join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .orderBy(col("rrf").desc, col("doc_id")).limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("source"), col("n_lists"), col("rrf"))
+    rankTopK(fused, docs, k, Seq(col("rrf").desc, col("doc_id")), Seq("n_lists", "rrf"))
   }
 
   /** nDCG@k ranking-quality audit — the graded IR metric the search

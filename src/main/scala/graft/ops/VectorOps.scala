@@ -103,12 +103,8 @@ object VectorOps {
     * boundary loss mode. */
   def similarityJoinIvf(embeddings: DataFrame, threshold: Double, nAssign: Int = 2,
                         centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(embeddings)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
+    val cent = centroids.getOrElse(labelCells(embeddings))
+    val assigned = nearestCells(embeddings, cent, "id", nAssign)
     val cand = assigned.select(col("id").as("a_id"), col("c_label"))
       .join(assigned.select(col("id").as("b_id"), col("c_label")), "c_label")
       .filter(col("a_id") < col("b_id"))
@@ -199,12 +195,8 @@ object VectorOps {
     * on the uniform anchor id, nothing driver-side. */
   def hardNegatives(embeddings: DataFrame, nAssign: Int = 2,
                     centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(embeddings)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
+    val cent = centroids.getOrElse(labelCells(embeddings))
+    val assigned = nearestCells(embeddings, cent, "id", nAssign)
     val lab = embeddings.select(col("vec_id"), col("label"))
     val cand = assigned.select(col("id").as("anchor_id"), col("c_label"))
       .join(assigned.select(col("id").as("neg_id"), col("c_label")), "c_label")
@@ -244,12 +236,8 @@ object VectorOps {
     * to normalize the −0.0 corner. */
   def tripletMining(embeddings: DataFrame, nAssign: Int = 2,
                     centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(embeddings)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
+    val cent = centroids.getOrElse(labelCells(embeddings))
+    val assigned = nearestCells(embeddings, cent, "id", nAssign)
     val lab = embeddings.select(col("vec_id"), col("label"))
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val scored = assigned.select(col("id").as("anchor_id"), col("c_label"))
@@ -302,9 +290,7 @@ object VectorOps {
                             tau: Double = 0.35, nAssign: Int = 2,
                             centroids: Option[DataFrame] = None): DataFrame = {
     val cent = centroids.getOrElse(sqrtCells(embeddings, iters = 2))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
+    val assigned = nearestCells(embeddings, cent, "id", nAssign)
     val cand = assigned.filter(col("id") >= nBench)
       .select(col("id").as("corpus_id"), col("c_label"))
       .join(assigned.filter(col("id") < nBench)
@@ -467,15 +453,9 @@ object VectorOps {
   def ivfQuantizedTopK(corpus: DataFrame, queries: DataFrame, nProbe: Int, k: Int,
                        centroids: Option[DataFrame] = None, nAssign: Int = 1,
                        rerankFactor: Int = 4): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(corpus)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(corpus, cent, "vec_id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("vec_id"), col("c_label"))
-    val probes = cellRanks(queries, cent, "query_id")
-      .filter(col("cell_rank") <= nProbe)
-      .select(col("query_id"), col("c_label"))
+    val cent = centroids.getOrElse(labelCells(corpus))
+    val assigned = nearestCells(corpus, cent, "vec_id", nAssign)
+    val probes = nearestCells(queries, cent, "query_id", nProbe)
     val candidates = probes.join(assigned, "c_label")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
@@ -524,51 +504,19 @@ object VectorOps {
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, m: Int = 8, ksub: Int = 16,
              iters: Int = 2, rerankFactor: Int = 4): DataFrame = {
-    val d = corpus.select(size(col("embedding"))).head().getInt(0)
-    require(d % m == 0, s"dims $d not divisible by m=$m subspaces")
+    val dsub = subspaceDims(corpus, m)
     requireDenseSeedIds(corpus, ksub, "pqTopK")
-    val dsub = d / m
-
-    // map-side subvector view: (id, s, sv[dsub]) — slice, never a shuffle
-    def subvecs(df: DataFrame, idCol: String): DataFrame = df
-      .select(col("vec_id").as(idCol), asDouble(col("embedding")).as("e"))
-      .withColumn("s", explode(sequence(lit(0L), lit(m - 1L))))
-      .select(col(idCol), col("s"),
-        slice(col("e"), (col("s") * dsub + 1).cast("int"), lit(dsub)).as("sv"))
-
-    // densify exploded (s, code, ld, cv) codebooks to broadcastable
-    // (s, code, cvec) rows — per-group collect bounded by dsub
-    def dense(centExpl: DataFrame): DataFrame = centExpl
-      .groupBy(col("s"), col("code"))
-      .agg(transform(array_sort(collect_list(struct(col("ld"), col("cv")))),
-        x => x.getField("cv")).as("cvec"))
-
-    // nearest-code argmin per (id, subspace): rounded distance, code
-    // tie-break, evaluated as a partial-aggregated min_by over the
-    // codegen'd dense-array kernel (no window over the N·m·ksub rows)
-    def assign(sv: DataFrame, idCol: String, centDense: DataFrame): DataFrame = sv
-      .join(broadcast(centDense), "s")
-      .withColumn("dist", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
-      .groupBy(col(idCol), col("s"))
-      .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
+    def subvecs(df: DataFrame, idCol: String): DataFrame = ivfPqSubvecs(
+      df.select(col("vec_id").as(idCol), asDouble(col("embedding")).as("e")),
+      Seq(idCol), "e", m, dsub)
 
     val csv = subvecs(corpus, "vec_id")
     // seeds: the first ksub vectors' subvectors, rounded like the oracle
     var cent = subvecs(corpus.filter(col("vec_id") < ksub), "code")
       .select(col("s"), col("code"), transform(col("sv"), x => roundn(x, 6)).as("cvec"))
-    for (_ <- 1 to iters) {
-      val a = assign(csv, "vec_id", cent)
-      cent = dense(
-        csv.join(a, Seq("vec_id", "s"))
-          .select(col("s"), col("code"), posexplode(col("sv")).as(Seq("ld", "x")))
-          .groupBy(col("s"), col("code"), col("ld"))
-          .agg(roundn(avg(col("x")), 6).as("cv")))
-    }
+    for (_ <- 1 to iters) cent = pqUpdate(csv, ivfPqAssign(csv, "vec_id", cent))
 
-    val codes = assign(csv, "vec_id", cent)
-    val codesArr = codes.groupBy(col("vec_id"))
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-        x => x.getField("code")).as("carr"))
+    val codesArr = sortedList(ivfPqAssign(csv, "vec_id", cent), Seq("vec_id"), "s", "code", "carr")
     // per-query LUT as a MAP keyed by s·ksub + code (m·ksub entries)
     val lut = subvecs(queries, "query_id")
       .join(broadcast(cent), "s")
@@ -576,7 +524,6 @@ object VectorOps {
       .groupBy(col("query_id"))
       .agg(map_from_entries(collect_list(
         struct((col("s") * ksub + col("code")).as("idx"), col("pd")))).as("lut"))
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
     val cand = codesArr.crossJoin(broadcast(lut))
       .filter(col("vec_id") =!= col("query_id"))
       // ADC: fold the m table lookups in subspace order — map-side,
@@ -584,10 +531,47 @@ object VectorOps {
       .withColumn("qdist", roundn(aggregate(
         sequence(lit(0L), lit(m - 1L)), lit(0.0),
         (acc, s) => acc + element_at(col("lut"), s * ksub + element_at(col("carr"), (s + 1).cast("int")))), 6))
+    adcBudgetRerank(cand, corpus, queries, k, rerankFactor)
+  }
+
+  /** One codebook update from an assignment `a (vec_id, s, code)`:
+    * per (subspace, code, component) rounded mean of the member
+    * subvectors, densified to broadcastable `(s, code, cvec)` rows —
+    * the per-group collect is bounded by dsub. */
+  private def pqUpdate(csv: DataFrame, a: DataFrame): DataFrame = sortedList(
+    csv.join(a, Seq("vec_id", "s"))
+      .select(col("s"), col("code"), posexplode(col("sv")).as(Seq("ld", "x")))
+      .groupBy(col("s"), col("code"), col("ld"))
+      .agg(roundn(avg(col("x")), 6).as("cv")),
+    Seq("s", "code"), "ld", "cv", "cvec")
+
+  /** `value` collected per `keys` into an array ordered by `pos` — the
+    * densify step from an exploded (keys…, pos, value) table to one
+    * broadcastable row per key. */
+  private def sortedList(df: DataFrame, keys: Seq[String], pos: String, value: String,
+                         name: String): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col(pos), col(value)))),
+        x => x.getField(value)).as(name))
+
+  /** The eager dims probe of the PQ tier: the subvector width d / m,
+    * after checking `m` divides the vector dimension. */
+  private def subspaceDims(df: DataFrame, m: Int): Int = {
+    val d = df.select(size(col("embedding"))).head().getInt(0)
+    require(d % m == 0, s"dims $d not divisible by m=$m subspaces")
+    d / m
+  }
+
+  /** The k·rerankFactor ADC budget window per query over
+    * `(query_id, vec_id, qdist)` candidates, then the exact-cosine
+    * rerank ([[exactCosRerank]], floats only on survivors). */
+  private def adcBudgetRerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+                              k: Int, rerankFactor: Int): DataFrame = {
+    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
+    exactCosRerank(cand
       .withColumn("qrank", row_number().over(wq))
       .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
+      .select(col("query_id"), col("vec_id"), col("qdist")), corpus, queries, k)
   }
 
 
@@ -641,20 +625,13 @@ object VectorOps {
     * vectors' residual subvectors, `iters` assign/update rounds. */
   def ivfPqIndex(corpus: DataFrame, cent: DataFrame,
                  m: Int = 8, ksub: Int = 16, iters: Int = 2): (DataFrame, DataFrame) = {
-    val d = corpus.select(size(col("embedding"))).head().getInt(0)
-    require(d % m == 0, s"dims $d not divisible by m=$m subspaces")
+    val dsub = subspaceDims(corpus, m)
     requireDenseSeedIds(corpus, ksub, "ivfPqIndex")
-    val dsub = d / m
-    val centDense = cent
-      .groupBy(col("c_label"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("ccvec"))
+    val centDense = sortedList(cent, Seq("c_label"), "dim", "cv", "ccvec")
 
     // primary-cell assignment + map-side residual (raw double − the
     // once-rounded centroid component, the oracle's d.x − c.cv)
-    val assigned = cellRanks(corpus, cent, "vec_id")
-      .filter(col("cell_rank") <= 1)
-      .select(col("vec_id"), col("c_label"))
+    val assigned = nearestCells(corpus, cent, "vec_id", 1)
     val res = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .join(assigned, "vec_id")
       .join(broadcast(centDense), "c_label")
@@ -672,23 +649,11 @@ object VectorOps {
     var pqc = ivfPqSubvecs(res.filter(col("vec_id") < ksub)
         .withColumnRenamed("vec_id", "code"), Seq("code"), "r", m, dsub)
       .select(col("s"), col("code"), transform(col("sv"), x => roundn(x, 6)).as("cvec"))
-    for (_ <- 1 to iters) {
-      val a = ivfPqAssign(csv, "vec_id", pqc)
-      pqc = csv.join(a, Seq("vec_id", "s"))
-        .select(col("s"), col("code"), posexplode(col("sv")).as(Seq("ld", "x")))
-        .groupBy(col("s"), col("code"), col("ld"))
-        .agg(roundn(avg(col("x")), 6).as("cv"))
-        .groupBy(col("s"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("ld"), col("cv")))),
-          x => x.getField("cv")).as("cvec"))
-    }
+    for (_ <- 1 to iters) pqc = pqUpdate(csv, ivfPqAssign(csv, "vec_id", pqc))
     // the trained codebook heads the encode here and the query LUT in
     // the apply half — m·ksub rows, pin it
     pqc = pqc.localCheckpoint(false)
-    val codes = ivfPqAssign(csv, "vec_id", pqc)
-      .groupBy(col("vec_id"))
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-        x => x.getField("code")).as("carr"))
+    val codes = sortedList(ivfPqAssign(csv, "vec_id", pqc), Seq("vec_id"), "s", "code", "carr")
       .join(assigned, "vec_id")
       .select(col("vec_id"), col("c_label"), col("carr"))
     (pqc, codes)
@@ -709,8 +674,8 @@ object VectorOps {
         "row_number() over vec_id before training")
   }
 
-  /** Map-side subvector view shared by the IVFADC train/apply halves:
-    * (keys..., s, sv[dsub]) — slice, never a shuffle. */
+  /** Map-side subvector view shared by [[pqTopK]] and the IVFADC
+    * train/apply halves: (keys..., s, sv[dsub]) — slice, never a shuffle. */
   private def ivfPqSubvecs(df: DataFrame, keyCols: Seq[String], vecCol: String,
                            m: Int, dsub: Int): DataFrame = df
     .withColumn("s", explode(sequence(lit(0L), lit(m - 1L))))
@@ -718,7 +683,8 @@ object VectorOps {
       slice(col(vecCol), (col("s") * dsub + 1).cast("int"), lit(dsub)).as("sv")): _*)
 
   /** Nearest-code argmin per (id, subspace): rounded distance, code
-    * tie-break, partial-aggregated min_by (the pqTopK kernel). */
+    * tie-break, evaluated as a partial-aggregated min_by over the
+    * codegen'd dense-array kernel (no window over the N·m·ksub rows). */
   private def ivfPqAssign(sv: DataFrame, idCol: String, centDn: DataFrame): DataFrame = sv
     .join(broadcast(centDn), "s")
     .withColumn("dist", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
@@ -734,16 +700,9 @@ object VectorOps {
   def ivfPqCandidatesFromIndex(queries: DataFrame, nProbe: Int, cent: DataFrame,
                                pqCodebook: DataFrame, codes: DataFrame,
                                m: Int = 8, ksub: Int = 16): DataFrame = {
-    val d = queries.select(size(col("embedding"))).head().getInt(0)
-    require(d % m == 0, s"dims $d not divisible by m=$m subspaces")
-    val dsub = d / m
-    val centDense = cent
-      .groupBy(col("c_label"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("ccvec"))
-    val probes = cellRanks(queries, cent, "query_id")
-      .filter(col("cell_rank") <= nProbe)
-      .select(col("query_id"), col("c_label"))
+    val dsub = subspaceDims(queries, m)
+    val centDense = sortedList(cent, Seq("c_label"), "dim", "cv", "ccvec")
+    val probes = nearestCells(queries, cent, "query_id", nProbe)
     val qres = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
       .join(probes, "query_id")
       .join(broadcast(centDense), "c_label")
@@ -765,10 +724,6 @@ object VectorOps {
       .select(col("query_id"), col("vec_id"), col("qdist"))
   }
 
-  /** [[ivfPqTopK]]'s budget window + exact rerank against a
-    * precomputed (possibly persisted-and-reloaded) index — the load
-    * half of load-or-create on the PQ tier; must reproduce the
-    * in-session [[ivfPqTopK]] answer bit-for-bit (shared oracle). */
   /** PQ distortion receipt — the number a trained codebook SHIPS
     * with (Jégou TPAMI'11's quantization MSE, the standard
     * train-time diagnostic): per vector, the squared error between
@@ -788,13 +743,8 @@ object VectorOps {
   def ivfPqDistortion(corpus: DataFrame, cent: DataFrame,
                       pqCodebook: DataFrame, codes: DataFrame,
                       m: Int = 8, ksub: Int = 16): DataFrame = {
-    val d = corpus.select(size(col("embedding"))).head().getInt(0)
-    require(d % m == 0, s"dims $d not divisible by m=$m subspaces")
-    val dsub = d / m
-    val centDense = cent
-      .groupBy(col("c_label"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("ccvec"))
+    val dsub = subspaceDims(corpus, m)
+    val centDense = sortedList(cent, Seq("c_label"), "dim", "cv", "ccvec")
     val res = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .join(codes.select(col("vec_id"), col("c_label"), col("carr")), "vec_id")
       .join(broadcast(centDense), "c_label")
@@ -825,17 +775,16 @@ object VectorOps {
         col("p50_micro"), col("p95_micro"), col("max_micro"))
   }
 
+  /** [[ivfPqTopK]]'s budget window + exact rerank against a
+    * precomputed (possibly persisted-and-reloaded) index — the load
+    * half of load-or-create on the PQ tier; must reproduce the
+    * in-session [[ivfPqTopK]] answer bit-for-bit (shared oracle). */
   def ivfPqTopKFromIndex(corpus: DataFrame, queries: DataFrame, nProbe: Int, k: Int,
                          cent: DataFrame, pqCodebook: DataFrame, codes: DataFrame,
                          m: Int = 8, ksub: Int = 16,
-                         rerankFactor: Int = 4): DataFrame = {
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
-    val cand = ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes, m, ksub)
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
-  }
+                         rerankFactor: Int = 4): DataFrame =
+    adcBudgetRerank(ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes, m, ksub),
+      corpus, queries, k, rerankFactor)
 
   /** Residual IVFADC top-k — see [[ivfPqCandidates]] for the funnel;
     * this applies the k·rerankFactor ADC budget and the exact-cosine
@@ -843,14 +792,9 @@ object VectorOps {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, nProbe: Int, k: Int,
                 centroids: Option[DataFrame] = None,
                 m: Int = 8, ksub: Int = 16, iters: Int = 2,
-                rerankFactor: Int = 4): DataFrame = {
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
-    val cand = ivfPqCandidates(corpus, queries, nProbe, centroids, m, ksub, iters)
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
-  }
+                rerankFactor: Int = 4): DataFrame =
+    adcBudgetRerank(ivfPqCandidates(corpus, queries, nProbe, centroids, m, ksub, iters),
+      corpus, queries, k, rerankFactor)
 
   /** The IVFADC leg of the recall-receipt family — rerank budget vs
     * recall@k against the brute-force ground truth (the
@@ -1158,14 +1102,6 @@ object VectorOps {
     }.toDF("c_id", "dim", "cv")
   }
 
-  /** Nearest-cells ranking per vector: broadcast the k centroids as
-    * DENSE arrays and evaluate the codegen'd [[fastL2Sq]] kernel over
-    * the map-only N×k cross join — no dim explosion, no aggregation
-    * (a single-row array fold in ascending dim order is bit-equal to
-    * the oracle's `sum((x-cv)^2 ORDER BY dim)` and deterministic by
-    * construction). The only shuffle is the per-id rank window.
-    * Output: (idCol, c_label, cdist, cell_rank). Shared by [[ivfTopK]]
-    * and [[similarityJoinIvf]]. */
   /** K-means as a first-class clustering RESULT (not just the ANN
     * quantizer it powers): per cluster, the member count and the
     * inertia (Σ squared-L2 to the centroid) of the √N-cell Lloyd
@@ -1195,13 +1131,19 @@ object VectorOps {
         roundn(col("inertia6").cast("double") / 1e6, 6).as("inertia"))
   }
 
+  /** Nearest-cells ranking per vector: broadcast the k centroids as
+    * DENSE arrays and evaluate the codegen'd [[fastL2Sq]] kernel over
+    * the map-only N×k cross join — no dim explosion, no aggregation
+    * (a single-row array fold in ascending dim order is bit-equal to
+    * the oracle's `sum((x-cv)^2 ORDER BY dim)` and deterministic by
+    * construction). The only shuffle is the per-id rank window.
+    * Output: (idCol, c_label, cdist, cell_rank). Shared by [[ivfTopK]]
+    * and [[similarityJoinIvf]]. */
   def cellRanks(df: DataFrame, cent: DataFrame, idCol: String): DataFrame = {
     // densify the exploded (c_label, dim, cv) interchange form into k
     // broadcastable rows (c_label, cvec): the per-label collect is
     // bounded by the dimension count, never by data size
-    val dense = cent.groupBy(col("c_label")).agg(
-      transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        s => s.getField("cv")).as("cvec"))
+    val dense = sortedList(cent, Seq("c_label"), "dim", "cv", "cvec")
     df.select(col("vec_id").as(idCol), asDouble(col("embedding")).as("e"))
       .crossJoin(broadcast(dense))
       .withColumn("cdist", roundn(fastL2Sq(col("e"), col("cvec")), 6))
@@ -1211,6 +1153,17 @@ object VectorOps {
           Window.partitionBy(col(idCol)).orderBy(col("cdist"), col("c_label"))))
       .select(col(idCol), col("c_label"), col("cdist"), col("cell_rank"))
   }
+
+  /** The `n` nearest cells of every vector: `(idCol, c_label)`. */
+  private[graft] def nearestCells(df: DataFrame, cent: DataFrame, idCol: String,
+                                  n: Int): DataFrame =
+    cellRanks(df, cent, idCol).filter(col("cell_rank") <= n).select(col(idCol), col("c_label"))
+
+  /** Label-mean centroids in the `(c_label, dim, cv)` cell form — the
+    * default coarse quantizer when no trained cells are supplied. */
+  private def labelCells(embeddings: DataFrame): DataFrame =
+    meanPoolByLabel(embeddings)
+      .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv"))
 
   /** IVF-style approximate top-k — the 100 TB scale path for
     * [[annTopK]]: a coarse quantizer (here: per-label centroids from
@@ -1243,18 +1196,14 @@ object VectorOps {
     // (c_label, dim, cv): rounded per-dimension centroids — label
     // means by default, or refined cells (e.g. kmeansCentroids
     // renamed to (c_label, dim, cv)) when supplied
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(corpus)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
+    val cent = centroids.getOrElse(labelCells(corpus))
 
     // nAssign > 1 = multi-assignment: each vector lives in its
     // nAssign nearest cells, trading candidate-set size for recall
     // at cell BOUNDARIES — the loss mode more probes alone can't fix
     // cheaply (measured: nAssign=2 at nProbe=2 beats nProbe=4 on
     // candidates scanned per unit recall; see scaladoc table)
-    val assigned = cellRanks(corpus, cent, "vec_id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("vec_id"), col("c_label"))
+    val assigned = nearestCells(corpus, cent, "vec_id", nAssign)
     ivfTopKFromIndex(corpus, queries, assigned, cent, nProbe, k)
   }
 
@@ -1269,9 +1218,7 @@ object VectorOps {
     * 1-row-per-query build side, rank window per query. */
   def ivfTopKFromIndex(corpus: DataFrame, queries: DataFrame, assigned: DataFrame,
                        cent: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    val probes = cellRanks(queries, cent, "query_id")
-      .filter(col("cell_rank") <= nProbe)
-      .select(col("query_id"), col("c_label"))
+    val probes = nearestCells(queries, cent, "query_id", nProbe)
 
     val candidates = probes
       .join(assigned, "c_label")
@@ -1320,9 +1267,7 @@ object VectorOps {
                          baseAssigned: DataFrame, cent: DataFrame,
                          batch: DataFrame, nProbe: Int, k: Int,
                          nAssign: Int): DataFrame = {
-    val batchAssigned = cellRanks(batch, cent, "vec_id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("vec_id"), col("c_label"))
+    val batchAssigned = nearestCells(batch, cent, "vec_id", nAssign)
     val merged = baseAssigned.select(col("vec_id"), col("c_label"))
       .unionByName(batchAssigned)
     ivfTopKFromIndex(corpus, queries, merged, cent, nProbe, k)
@@ -1384,9 +1329,7 @@ object VectorOps {
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     val cent = sqrtCells(corpus, iters = 2).localCheckpoint(false)
     val maxP = nProbes.max
-    val assigned = cellRanks(corpus, cent, "vec_id")
-      .filter(col("cell_rank") <= 1)
-      .select(col("vec_id"), col("c_label"))
+    val assigned = nearestCells(corpus, cent, "vec_id", 1)
     val probes = cellRanks(queries, cent, "query_id")
       .filter(col("cell_rank") <= maxP)
       .select(col("query_id"), col("c_label"), col("cell_rank"))
@@ -2060,12 +2003,8 @@ object VectorOps {
     * uniform point id; top-N = TakeOrderedAndProject. */
   def lofOutliers(embeddings: DataFrame, k: Int = 5, nAssign: Int = 2,
                   topN: Int = 20, centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(embeddings)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
+    val cent = centroids.getOrElse(labelCells(embeddings))
+    val assigned = nearestCells(embeddings, cent, "id", nAssign)
     // distances once per UNDIRECTED pair (L2 is symmetric), mirrored
     // after the kernel — halves the fold work on both engines
     val cand = assigned.select(col("id").as("p_id"), col("c_label"))
