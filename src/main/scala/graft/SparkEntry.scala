@@ -49,16 +49,35 @@ object SparkEntry {
     * a stale or corrupt cached artifact hash-mismatches the gate. */
   private def loadOrCreate(s: SparkSession, name: String, dir: String)
                           (train: => DataFrame): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_model_${name}_${tag}_" +
-      s.sparkContext.applicationId
+    val path = runTmp(s, s"model_${name}_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}")
     val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
     val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      train.write.mode("overwrite").parquet(path)
-      cleanupOnExit(path)
-    }
+    if (!fs.exists(marker)) train.write.mode("overwrite").parquet(path)
     s.read.parquet(path)
+  }
+
+  /** A run-unique temp path `graft_<tag>_<applicationId>` — deterministic
+    * within a run, immune to stale or concurrent-run leftovers at a
+    * fixed path — deleted at JVM exit (it must outlive the lazy
+    * evaluation of the result that reads it). */
+  private def runTmp(s: SparkSession, tag: String): String = {
+    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
+      s.sparkContext.applicationId
+    cleanupOnExit(tmp)
+    tmp
+  }
+
+  /** The shared persisted IVF-PQ index — coarse cells, residual
+    * codebook and encoded corpus — trained once per (corpus, JVM);
+    * the codebook and codes train together, and only if either is
+    * missing. */
+  private def ivfPqArtifacts(s: SparkSession, dir: String,
+                             emb: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val cent = loadOrCreate(s, "ivfpq_cent", dir)(
+      VectorOps.sqrtCellsWithK(emb, iters = 2)._2)
+    lazy val trained = VectorOps.ivfPqIndex(emb, cent)
+    (cent, loadOrCreate(s, "ivfpq_codebook", dir)(trained._1),
+      loadOrCreate(s, "ivfpq_codes", dir)(trained._2))
   }
 
   private def knnQuery(s: SparkSession, dir: String): DataFrame = {
@@ -135,22 +154,18 @@ object SparkEntry {
     // text format — JSON-lines escaping must preserve every byte)
     "json_roundtrip" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_jsonrt_" +
-        s.sparkContext.applicationId
+      val tmp = runTmp(s, "jsonrt")
       docs.write.mode("overwrite").json(tmp)
-      cleanupOnExit(tmp)
       CorpusOps.contentHash(s.read.schema(docs.schema).json(tmp))
     }),
     // CSV twin of json_roundtrip: quote/escape handling must preserve
     // every byte (multiline fields enabled on the read side)
     "csv_roundtrip" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csvrt_" +
-        s.sparkContext.applicationId
+      val tmp = runTmp(s, "csvrt")
       docs.write.mode("overwrite")
         .option("header", "true").option("escape", "\"")
         .csv(tmp)
-      cleanupOnExit(tmp)
       CorpusOps.contentHash(
         s.read.schema(docs.schema)
           .option("header", "true").option("escape", "\"").option("multiLine", "true")
@@ -160,10 +175,8 @@ object SparkEntry {
     // built-in columnar format; byte-exact through writer+reader
     "orc_roundtrip" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_orcrt_" +
-        s.sparkContext.applicationId
+      val tmp = runTmp(s, "orcrt")
       docs.write.mode("overwrite").orc(tmp)
-      cleanupOnExit(tmp)
       CorpusOps.contentHash(s.read.schema(docs.schema).orc(tmp))
     }),
     "embed_text" -> ((s, dir) => EmbedOps.embedSparse(Tables.documents(s, dir))),
@@ -288,11 +301,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (nProbe, _) = VectorOps.probePolicy(
         math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      val cent = loadOrCreate(s, "ivfpq_cent", dir)(
-        VectorOps.sqrtCellsWithK(emb, iters = 2)._2)
-      lazy val trained = VectorOps.ivfPqIndex(emb, cent)
-      val pq = loadOrCreate(s, "ivfpq_codebook", dir)(trained._1)
-      val codes = loadOrCreate(s, "ivfpq_codes", dir)(trained._2)
+      val (cent, pq, codes) = ivfPqArtifacts(s, dir, emb)
       VectorOps.ivfPqTopKFromIndex(emb, emb.filter(col("vec_id") < 10),
         nProbe = nProbe, k = 3, cent = cent, pqCodebook = pq, codes = codes,
         rerankFactor = 16)
@@ -308,11 +317,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (nProbe, _) = VectorOps.probePolicy(
         math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      val cent = loadOrCreate(s, "ivfpq_cent", dir)(
-        VectorOps.sqrtCellsWithK(emb, iters = 2)._2)
-      lazy val trained = VectorOps.ivfPqIndex(emb, cent)
-      val pq = loadOrCreate(s, "ivfpq_codebook", dir)(trained._1)
-      val codes = loadOrCreate(s, "ivfpq_codes", dir)(trained._2)
+      val (cent, pq, codes) = ivfPqArtifacts(s, dir, emb)
       VectorOps.ivfPqRecallCurve(emb, k = 3, nProbe = nProbe,
         centroids = Some(cent), index = Some((pq, codes)))
     }),
@@ -323,11 +328,7 @@ object SparkEntry {
     // retrains from scratch
     "ann_pq_distortion" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val cent = loadOrCreate(s, "ivfpq_cent", dir)(
-        VectorOps.sqrtCellsWithK(emb, iters = 2)._2)
-      lazy val trained = VectorOps.ivfPqIndex(emb, cent)
-      val pq = loadOrCreate(s, "ivfpq_codebook", dir)(trained._1)
-      val codes = loadOrCreate(s, "ivfpq_codes", dir)(trained._2)
+      val (cent, pq, codes) = ivfPqArtifacts(s, dir, emb)
       VectorOps.ivfPqDistortion(emb, cent, pq, codes)
     }),
     // diagonal-Mahalanobis mislabel screen: per-label centroid +
@@ -433,12 +434,10 @@ object SparkEntry {
     // band_sig) so the probe join reads the index shuffle-free)
     "dedup_index_persist" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_lshidx_" +
-        s.sparkContext.applicationId
+      val tmp = runTmp(s, "lshidx")
       DedupOps.lshBuckets(
         DedupOps.minhashSignatures(docs.filter(col("doc_id") < 400)))
         .write.mode("overwrite").parquet(tmp)
-      cleanupOnExit(tmp)
       DedupOps.incrementalCandidatesFromIndex(
         s.read.parquet(tmp), docs.filter(col("doc_id") >= 400))
     }),
@@ -1330,17 +1329,13 @@ object SparkEntry {
     // schema evolution: v1/v2 writer batches read back mergeSchema —
     // union schema, v1 rows null-filled, no row lost; null census
     "schema_merge" -> ((s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_schmerge_" +
-        s.sparkContext.applicationId
-      cleanupOnExit(tmp)
+      val tmp = runTmp(s, "schmerge")
       PersistOps.schemaMergeReceipt(Tables.documents(s, dir), tmp)
     }),
     // runtime partition pruning: fact partitioned by type, dim = the
     // runtime top-2 types; the DPP subquery is pinned in PersistOpsSpec
     "dpp_receipt" -> ((s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_dpp_" +
-        s.sparkContext.applicationId
-      cleanupOnExit(tmp)
+      val tmp = runTmp(s, "dpp")
       PersistOps.dppReceipt(Tables.events(s, dir), tmp)
     }),
     // bucketed co-located fact-fact join: bucketBy both sides on the
@@ -1401,10 +1396,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (kCells, cent) = VectorOps.sqrtCellsWithK(emb, iters = 2)
       val (nProbe, nAssign) = VectorOps.probePolicy(kCells)
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_" +
-        s.sparkContext.applicationId
+      val tmp = runTmp(s, "ivfidx")
       cent.write.mode("overwrite").parquet(tmp)
-      cleanupOnExit(tmp)
       VectorOps.ivfTopK(emb, emb.filter(col("vec_id") < 10), nProbe = nProbe, k = 3,
         centroids = Some(s.read.parquet(tmp)), nAssign = nAssign)
     }),
@@ -1423,12 +1416,10 @@ object SparkEntry {
       val batch = emb.filter(col("vec_id") % 10 >= 8)
       val (kCells, cent) = VectorOps.sqrtCellsWithK(base, iters = 2)
       val (nProbe, nAssign) = VectorOps.probePolicy(kCells)
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_annincr_" +
-        s.sparkContext.applicationId
+      val tmp = runTmp(s, "annincr")
       cent.write.mode("overwrite").parquet(s"$tmp/cent")
       VectorOps.nearestCells(base, cent, "vec_id", nAssign)
         .write.mode("overwrite").parquet(s"$tmp/assigned")
-      cleanupOnExit(tmp)
       VectorOps.ivfIncrementalTopK(emb, emb.filter(col("vec_id") < 10),
         baseAssigned = s.read.parquet(s"$tmp/assigned"),
         cent = s.read.parquet(s"$tmp/cent"),
@@ -1465,24 +1456,17 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter(col("vec_id") < 10)
       // ONE brute-force ground truth serves both method curves
-      val exact = VectorOps.annTopK(emb, q, 3)
-        .select(col("query_id"), col("vec_id")).localCheckpoint(false)
-      VectorOps.annRecallCurve(emb, q, k = 3, groundTruth = Some(exact))
-        .unionByName(VectorOps.srpRecallCurve(emb, k = 3, groundTruth = Some(exact)))
+      val exact = VectorOps.exactNeighbors(emb, q, 3)
+      VectorOps.annRecallCurve(emb, q, exact, k = 3)
+        .unionByName(VectorOps.srpRecallCurve(emb, exact, k = 3))
     }),
 
     // S6/S7 — persistence sink + load (reference app.py:161-168 pickle
     // round-trip → parquet round-trip; hashes prove fidelity)
     "persist_roundtrip" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      // run-unique path (applicationId) — deterministic within a run,
-      // immune to stale/concurrent-run leftovers at the fixed path
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_roundtrip_" +
-        s.sparkContext.applicationId
+      val tmp = runTmp(s, "roundtrip")
       docs.write.mode("overwrite").parquet(tmp)
-      // bound tmp usage across runs: each run deletes its directory
-      // at JVM exit (it must outlive lazy evaluation of the result)
-      cleanupOnExit(tmp)
       CorpusOps.contentHash(s.read.parquet(tmp))
     }),
     // Multimodal plumbing (binary payload featurization). The full

@@ -17,6 +17,27 @@ import graft.functions.VectorMath.roundn
   */
 object RelationalOps {
 
+  /** Nanoseconds per day and per hour: `events.ts` is Long nanos since
+    * the epoch, so `ts div DayNanos` is the UTC day number. */
+  private[ops] val DayNanos = 86400L * 1000 * 1000 * 1000
+  private[ops] val HourNanos = 3600L * 1000 * 1000 * 1000
+
+  /** The daily-mean rollup of the event-series receipts: per
+    * (event_type, day) mean value, rounded once — `(event_type, day,
+    * m)`. One (type, day) agg collapses the stream to the
+    * calendar-bounded table every series statistic runs on. */
+  private def dailyMean(events: DataFrame): DataFrame =
+    events
+      .select(col("event_type"), expr(s"ts div ${DayNanos}L").as("day"), col("value"))
+      .groupBy(col("event_type"), col("day"))
+      .agg(roundn(avg(col("value")), 6).as("m"))
+
+  /** [[dailyMean]] in exact integer micros — `(event_type, day, mm)`,
+    * the Spark twin of the oracle's `duckDailyMeanMicros`. */
+  private def dailyMeanMicros(events: DataFrame): DataFrame =
+    dailyMean(events).select(col("event_type"), col("day"),
+      expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+
   /** Customer⋈orders⋈lineitem revenue rollup by market segment.
     * customer (150 rows/sf0.001) broadcasts; orders⋈lineitem is the
     * one real shuffle, on l_orderkey — the natural co-partition key at
@@ -379,14 +400,13 @@ object RelationalOps {
     * model is a |types|²-bounded agg broadcast into the test pairs;
     * the audit agg keys on |types|. */
   def markovAccuracy(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val pairs = events
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("to_type", lead(col("event_type"), 1).over(w))
       .filter(col("to_type").isNotNull)
       .select(col("event_type").as("from_type"), col("to_type"),
-        expr(s"ts div ${dayNanos}L").as("day"))
+        expr(s"ts div ${DayNanos}L").as("day"))
     val bounds = pairs.agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
     val split = pairs.crossJoin(broadcast(bounds))
       .withColumn("is_train", col("day") < expr("(dmin + dmax + 1) div 2"))
@@ -436,10 +456,9 @@ object RelationalOps {
     * over the stream (the key space is |types|·24 — bounded); the
     * rank window partitions by type over ≤24 rows. */
   def eventsSeasonality(events: DataFrame): DataFrame = {
-    val hourNanos = 3600L * 1000 * 1000 * 1000
     val prof = events
       .select(col("event_type"),
-        (expr(s"ts div ${hourNanos}L") % 24).as("hour_of_day"), col("value"))
+        (expr(s"ts div ${HourNanos}L") % 24).as("hour_of_day"), col("value"))
       .groupBy(col("event_type"), col("hour_of_day"))
       .agg(count(lit(1)).as("n_events"), roundn(avg(col("value")), 6).as("avg_value"))
     prof.withColumn("peak_rank",
@@ -468,7 +487,6 @@ object RelationalOps {
     * types), the band agg is 4 rows. No windows over unbounded sets
     * (the argmax window partitions by user — bounded by |types|). */
   def kAnonymity(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val wTop = Window.partitionBy(col("user_id"))
       .orderBy(col("n_t").desc, col("event_type"))
     val topType = events.groupBy(col("user_id"), col("event_type"))
@@ -477,7 +495,7 @@ object RelationalOps {
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_type").as("top_type"))
     val profile = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
+      .select(col("user_id"), expr(s"ts div ${DayNanos}L").as("day"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_ev"), countDistinct(col("day")).as("n_days"))
       .select(col("user_id"),
@@ -507,7 +525,6 @@ object RelationalOps {
     * kAnonymity uses, then a bounded-key (≤ 11·11) class agg —
     * nothing wider than the per-user reduction. */
   def lDiversity(events: DataFrame, lMin: Long = 3): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val wTop = Window.partitionBy(col("user_id"))
       .orderBy(col("n_t").desc, col("event_type"))
     val topType = events.groupBy(col("user_id"), col("event_type"))
@@ -516,7 +533,7 @@ object RelationalOps {
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_type").as("top_type"))
     val profile = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
+      .select(col("user_id"), expr(s"ts div ${DayNanos}L").as("day"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_ev"), countDistinct(col("day")).as("n_days"))
       .select(col("user_id"),
@@ -591,9 +608,8 @@ object RelationalOps {
   }
 
   def cohortRetention(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val active = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
+      .select(col("user_id"), expr(s"ts div ${DayNanos}L").as("day"))
       .distinct()
     val cohorts = active.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
     val cells = active.join(cohorts, "user_id")
@@ -715,9 +731,8 @@ object RelationalOps {
     * is bounded); pair counts and singles are bounded aggs; the
     * basket total is a 1-row scalar crossJoin. */
   def basketLift(events: DataFrame, minSupport: Int = 5): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val baskets = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"), col("event_type"))
+      .select(col("user_id"), expr(s"ts div ${DayNanos}L").as("day"), col("event_type"))
       .distinct()
       .groupBy(col("user_id"), col("day"))
       .agg(sort_array(collect_set(col("event_type"))).as("items"))
@@ -768,11 +783,9 @@ object RelationalOps {
     * |types| rows. An unmatched test hour (slot absent from train)
     * drops from the join — n_test counts scored rows only. */
   def eventsForecastBacktest(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val hourNanos = 3600L * 1000 * 1000 * 1000
     val base = events.select(col("event_type"),
-      expr(s"ts div ${dayNanos}L").as("day"),
-      (expr(s"ts div ${hourNanos}L") % 24).as("hour_of_day"), col("value"))
+      expr(s"ts div ${DayNanos}L").as("day"),
+      (expr(s"ts div ${HourNanos}L") % 24).as("hour_of_day"), col("value"))
     val bounds = base.groupBy(col("event_type"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .withColumn("split_day", expr("(d0 + d1 + 1) div 2"))
@@ -811,11 +824,7 @@ object RelationalOps {
     * Scale shape: one (type, day) agg collapses the stream; all lag
     * joins and folds run on the calendar-bounded daily table. */
   def eventsAutocorr(events: DataFrame, maxLag: Int = 7): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
+    val daily = dailyMean(events)
     val mean = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
         roundn(graft.functions.VectorMath.orderedSum(col("day"), col("m")), 6).as("sm"))
@@ -862,11 +871,9 @@ object RelationalOps {
     * becomes approx_percentile at 100 TB (the approx_stats_check
     * swap). */
   def forecastInterval(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val hourNanos = 3600L * 1000 * 1000 * 1000
     val base = events.select(col("event_type"),
-      expr(s"ts div ${dayNanos}L").as("day"),
-      (expr(s"ts div ${hourNanos}L") % 24).as("hour_of_day"), col("value"))
+      expr(s"ts div ${DayNanos}L").as("day"),
+      (expr(s"ts div ${HourNanos}L") % 24).as("hour_of_day"), col("value"))
     val bounds = base.groupBy(col("event_type"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .withColumn("cut1", expr("d0 + (d1 - d0 + 1) div 3"))
@@ -915,13 +922,8 @@ object RelationalOps {
     * the OLS denominator n·sxx − sx² is 0 there (NaN on both
     * engines otherwise). */
   def eventsTrend(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day").as("x"),
-        round(col("m") * 1e6).cast("long").as("y6"))
+    val daily = dailyMeanMicros(events)
+      .select(col("event_type"), col("day").as("x"), col("mm").as("y6"))
     daily
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
@@ -991,9 +993,8 @@ object RelationalOps {
     * windows over distinct-value tables; three broadcast score-map
     * joins back; a ≤6-key final agg. */
   def rfmSegments(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val p = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"),
+      .select(col("user_id"), expr(s"ts div ${DayNanos}L").as("day"),
         round(col("value") * 100).cast("long").as("cents"))
     val horizon = p.agg(max(col("day")).as("hday"))
     val rfm = p.groupBy(col("user_id"))
@@ -1085,9 +1086,8 @@ object RelationalOps {
     * table — the single-partition windows are bounded by
     * construction, never corpus-sized. */
   def survivalCurve(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val byUser = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
+      .select(col("user_id"), expr(s"ts div ${DayNanos}L").as("day"))
       .groupBy(col("user_id"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val maxDay = byUser.agg(max(col("d1")).as("max_day"))
@@ -1216,11 +1216,7 @@ object RelationalOps {
     * — the period mean, the running sum, the argmax window — runs on
     * |types|·|days| rows. */
   def eventsChangepoint(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
+    val daily = dailyMean(events)
     val period = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
         roundn(graft.functions.VectorMath.orderedSum(col("day"), col("m")), 6).as("sm"))
@@ -1434,9 +1430,8 @@ object RelationalOps {
     * (baseline (event_type, hour_of_day, baseline),
     *  gates (event_type, med_resid, mad, threshold)). */
   def seasonalGates(events: DataFrame, k: Double = 3.0): (DataFrame, DataFrame) = {
-    val hourNanos = 3600L * 1000 * 1000 * 1000
     val base = events.select(col("event_type"),
-      (expr(s"ts div ${hourNanos}L") % 24).as("hour_of_day"), col("value"))
+      (expr(s"ts div ${HourNanos}L") % 24).as("hour_of_day"), col("value"))
     val prof = base.groupBy(col("event_type"), col("hour_of_day"))
       .agg(roundn(avg(col("value")), 6).as("baseline"))
     val resid = base
@@ -1475,10 +1470,9 @@ object RelationalOps {
     * The screen's trained artifacts live in [[seasonalGates]] so the
     * STREAMING twin can score arrivals against the same gates. */
   def seasonalAnomalies(events: DataFrame, k: Double = 3.0): DataFrame = {
-    val hourNanos = 3600L * 1000 * 1000 * 1000
     val (prof, mad) = seasonalGates(events, k)
     val base = events.select(col("event_type"),
-      (expr(s"ts div ${hourNanos}L") % 24).as("hour_of_day"), col("value"))
+      (expr(s"ts div ${HourNanos}L") % 24).as("hour_of_day"), col("value"))
     val dev = base
       .join(broadcast(prof), Seq("event_type", "hour_of_day"))
       .withColumn("resid", col("value") - col("baseline"))
@@ -1752,9 +1746,8 @@ object RelationalOps {
   def hourlyGapFill(events: DataFrame): DataFrame = {
     // integer `div`, not `/`: epoch-nanos exceed double's 53-bit
     // mantissa, so float division could mis-bucket an hour boundary
-    val hourNanos = 3600L * 1000 * 1000 * 1000
     val h = events.select(col("event_type"),
-      expr(s"ts div ${hourNanos}L").as("hour_idx"))
+      expr(s"ts div ${HourNanos}L").as("hour_idx"))
     val bounds = h.agg(min(col("hour_idx")).as("h0"), max(col("hour_idx")).as("h1"))
     val grid = h.select(col("event_type")).distinct()
       .crossJoin(broadcast(bounds))
@@ -1946,13 +1939,12 @@ object RelationalOps {
     * the bounded (type, half, bin) key with map-side partials; the
     * CDF windows run over ≤64 rows per (type, half). */
   def valueDrift(events: DataFrame, nBins: Int = 64): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val bounds = events.agg(
-      min(expr(s"ts div ${dayNanos}L")).as("d0"),
-      max(expr(s"ts div ${dayNanos}L")).as("d1"),
+      min(expr(s"ts div ${DayNanos}L")).as("d0"),
+      max(expr(s"ts div ${DayNanos}L")).as("d1"),
       min(col("value")).as("vmin"), max(col("value")).as("vmax"))
     val binned = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
+      .select(col("event_type"), expr(s"ts div ${DayNanos}L").as("day"), col("value"))
       .crossJoin(broadcast(bounds))
       .withColumn("half",
         when(col("day") < expr("(d0 + d1 + 1) div 2"), "early").otherwise("late"))
@@ -2013,12 +2005,11 @@ object RelationalOps {
     * Scale shape: one bounded (half, type) agg; everything downstream
     * is |types|-row arithmetic. */
   def mixDrift(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val bounds = events.agg(
-      min(expr(s"ts div ${dayNanos}L")).as("d0"),
-      max(expr(s"ts div ${dayNanos}L")).as("d1"))
+      min(expr(s"ts div ${DayNanos}L")).as("d0"),
+      max(expr(s"ts div ${DayNanos}L")).as("d1"))
     val counts = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"))
+      .select(col("event_type"), expr(s"ts div ${DayNanos}L").as("day"))
       .crossJoin(broadcast(bounds))
       .withColumn("half",
         when(col("day") < expr("(d0 + d1 + 1) div 2"), "early").otherwise("late"))
@@ -2500,7 +2491,6 @@ object RelationalOps {
     * ≤(11·11·|types|) class×type spine, bounded regardless of corpus
     * size. */
   def tCloseness(events: DataFrame, tMaxMicro: Long = 250000L): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val wTop = Window.partitionBy(col("user_id"))
       .orderBy(col("n_t").desc, col("event_type"))
     val topType = events.groupBy(col("user_id"), col("event_type"))
@@ -2509,7 +2499,7 @@ object RelationalOps {
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_type").as("top_type"))
     val profile = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
+      .select(col("user_id"), expr(s"ts div ${DayNanos}L").as("day"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_ev"), countDistinct(col("day")).as("n_days"))
       .select(col("user_id"),
@@ -2558,9 +2548,8 @@ object RelationalOps {
     * exact→approx swap approx_stats_check documents), and the Long
     * rank sums for decimal(38,0). */
   def mannWhitney(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val base = events.select(col("event_type"),
-      expr(s"ts div ${dayNanos}L").as("day"),
+      expr(s"ts div ${DayNanos}L").as("day"),
       (col("value") + lit(0.0)).as("v"))
     val bounds = base.groupBy(col("event_type"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
@@ -2615,13 +2604,7 @@ object RelationalOps {
     * window run over ≤ days²/2 rows per type — bounded by the
     * calendar, not the data. */
   def theilSenTrend(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day"),
-        expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+    val daily = dailyMeanMicros(events)
     val pairs = daily.as("a").join(daily.as("b"),
         col("a.event_type") === col("b.event_type") &&
           col("a.day") < col("b.day"))
@@ -2753,13 +2736,7 @@ object RelationalOps {
     * and the weighted fold run on the ≤ windowDays-row-per-type
     * table. */
   def eventsEwma(events: DataFrame, windowDays: Int = 32): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day"),
-        expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+    val daily = dailyMeanMicros(events)
     val bd = daily.groupBy(col("event_type")).agg(max(col("day")).as("d1"))
     val rk = daily.join(broadcast(bd), "event_type")
       .filter(col("day") > col("d1") - windowDays)
@@ -2813,19 +2790,13 @@ object RelationalOps {
   def eventsPeriodogram(events: DataFrame): DataFrame = {
     val ss = events.sparkSession
     import ss.implicits._
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val trig = (for {
       ki <- PeriodogramBins.indices
       n <- 0 until 28
     } yield (PeriodogramBins(ki).toLong, n.toLong,
       pgCosMicro(ki)(n), pgSinMicro(ki)(n)))
       .toDF("k", "n", "cosm", "sinm")
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day"),
-        expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+    val daily = dailyMeanMicros(events)
       // bounded (type, day) table serving three legs — one stream scan
       .localCheckpoint(false)
     val bd = daily.groupBy(col("event_type")).agg(max(col("day")).as("d1"))
@@ -2872,13 +2843,7 @@ object RelationalOps {
     * window runs over the calendar-bounded daily table, partitioned
     * on the uniform type key. */
   def eventsRankProfile(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day"),
-        expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+    val daily = dailyMeanMicros(events)
     val byVal = Window.partitionBy(col("event_type"))
       .orderBy(col("mm"), col("day"))
     val full = byVal.rowsBetween(Window.unboundedPreceding,
@@ -2975,13 +2940,12 @@ object RelationalOps {
     import graft.functions.VectorMath.orderedSum
     val ss = events.sparkSession
     import ss.implicits._
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val bounds = events.agg(
-      min(expr(s"ts div ${dayNanos}L")).as("d0"),
-      max(expr(s"ts div ${dayNanos}L")).as("d1"),
+      min(expr(s"ts div ${DayNanos}L")).as("d0"),
+      max(expr(s"ts div ${DayNanos}L")).as("d1"),
       min(col("value")).as("vmin"), max(col("value")).as("vmax"))
     val counts = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"),
+      .select(col("event_type"), expr(s"ts div ${DayNanos}L").as("day"),
         col("value"))
       .crossJoin(broadcast(bounds))
       .withColumn("half",
@@ -3044,13 +3008,7 @@ object RelationalOps {
     * Scale shape: one (type, day) agg collapses the stream; ranks,
     * census, and sums all run over the calendar-bounded daily table. */
   def spearmanTrend(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day"),
-        expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+    val daily = dailyMeanMicros(events)
     val census = daily.groupBy(col("event_type"), col("mm"))
       .agg(count(lit(1)).as("c"))
     val wBelow = Window.partitionBy(col("event_type")).orderBy(col("mm"))
@@ -3101,13 +3059,7 @@ object RelationalOps {
     * median, lag, and counts all run over the calendar-bounded daily
     * table. */
   def runsTest(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day"),
-        expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+    val daily = dailyMeanMicros(events)
     val census = daily.groupBy(col("event_type"), col("mm"))
       .agg(count(lit(1)).as("c"))
     val wCum = Window.partitionBy(col("event_type")).orderBy(col("mm"))
@@ -3896,13 +3848,7 @@ object RelationalOps {
     * window, dow census, and strength sums all run over the
     * calendar-bounded daily table. */
   def seasonalDecompose(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day"),
-        expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+    val daily = dailyMeanMicros(events)
     val w7 = Window.partitionBy(col("event_type")).orderBy(col("day"))
       .rowsBetween(-3, 3)
     val det = daily
@@ -4084,9 +4030,8 @@ object RelationalOps {
     * still expose, level says how much resolution the release pays. */
   def kAnonLadder(events: DataFrame, kMin: Long = 5,
                   maxLevel: Int = 4): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val profile = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
+      .select(col("user_id"), expr(s"ts div ${DayNanos}L").as("day"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_ev"), countDistinct(col("day")).as("n_days"))
       .select(least(lit(10L), expr("n_ev div 10")).as("act"),
@@ -4207,13 +4152,7 @@ object RelationalOps {
     * the O(n²) pair enumeration is over DAYS (n² ≤ a few thousand for
     * any calendar window), never over events. */
   def mannKendall(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day"),
-        expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+    val daily = dailyMeanMicros(events)
       .localCheckpoint(false)
     val a = daily.select(col("event_type"), col("day").as("d1"), col("mm").as("m1"))
     val b = daily.select(col("event_type"), col("day").as("d2"), col("mm").as("m2"))
@@ -4329,13 +4268,7 @@ object RelationalOps {
   def eventsHurst(events: DataFrame, windows: Seq[Int] = Seq(4, 8)): DataFrame = {
     require(windows.size == 2 && windows(1) == 2 * windows(0),
       "H is the difference quotient over one log-2 step")
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val daily = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"), col("value"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(roundn(avg(col("value")), 6).as("m"))
-      .select(col("event_type"), col("day"),
-        expr("CAST(round(m * 1000000) AS BIGINT)").as("mm"))
+    val daily = dailyMeanMicros(events)
       .localCheckpoint(false)
     def meanRs(w: Int): DataFrame = {
       val blk = daily.withColumn("blk", expr(s"day div ${w}L"))

@@ -494,11 +494,10 @@ object SketchOps {
     * ≤k-element day arrays (explode moves k rows per day, not the
     * stream); the whole-period twin is the receipt's cost. */
   def kmvUnionReceipt(events: DataFrame, k: Int = 64): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val H = 281474976710656L
     val kmv = graft.functions.SketchAggregators.kmvUdaf(k)
     val h = events.select(col("event_type"),
-      expr(s"ts div ${dayNanos}L").as("day"),
+      expr(s"ts div ${RelationalOps.DayNanos}L").as("day"),
       PortableHash.hash48(concat(lit("kmv:"), col("user_id").cast("string"))).as("h"))
     val perDay = h.groupBy(col("event_type"), col("day")).agg(kmv(col("h")).as("sk"))
     val merged = perDay
@@ -756,10 +755,9 @@ object SketchOps {
     * that makes HLL state a shuffle-safe partial aggregate), pinned as
     * a boolean beside the merged estimate. */
   def hllUnionReceipt(events: DataFrame, key: String = "user_id"): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
     val two42 = 4398046511104L
     val perDay = events
-      .select(col("event_type"), expr(s"ts div ${dayNanos}L").as("day"),
+      .select(col("event_type"), expr(s"ts div ${RelationalOps.DayNanos}L").as("day"),
         PortableHash.hash48(concat(lit("hll:"), col(key).cast("string"))).as("h"))
       .select(col("event_type"), col("day"),
         shiftright(col("h"), 42).as("idx"),

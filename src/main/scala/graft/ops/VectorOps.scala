@@ -103,20 +103,36 @@ object VectorOps {
     * boundary loss mode. */
   def similarityJoinIvf(embeddings: DataFrame, threshold: Double, nAssign: Int = 2,
                         centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(labelCells(embeddings))
-    val assigned = nearestCells(embeddings, cent, "id", nAssign)
-    val cand = assigned.select(col("id").as("a_id"), col("c_label"))
-      .join(assigned.select(col("id").as("b_id"), col("c_label")), "c_label")
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"))
-      .distinct() // a pair can share several cells
-    val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    cand
-      .join(e.select(col("vec_id").as("a_id"), col("e").as("ea")), "a_id")
-      .join(e.select(col("vec_id").as("b_id"), col("e").as("eb")), "b_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("ea"), col("eb")), 6))
+    val cand = cellPairs(embeddings, centroids, nAssign, "a_id", "b_id", directed = false)
+    pairCosine(cand, embeddings, "a_id", "b_id")
       .filter(col("cos_sim") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos_sim"))
+  }
+
+  /** IVF cell co-residency pairs: ids `(a, b)` sharing any of their
+    * `nAssign` nearest cells (label-mean cells unless `centroids` are
+    * given), `a < b` or, when `directed`, `a ≠ b` — each pair once.
+    * The cell equi-join bounds the pair blowup by cell occupancy. */
+  private def cellPairs(embeddings: DataFrame, centroids: Option[DataFrame], nAssign: Int,
+                        a: String, b: String, directed: Boolean): DataFrame = {
+    val cent = centroids.getOrElse(labelCells(embeddings))
+    val assigned = nearestCells(embeddings, cent, "id", nAssign)
+    assigned.select(col("id").as(a), col("c_label"))
+      .join(assigned.select(col("id").as(b), col("c_label")), "c_label")
+      .filter(if (directed) col(a) =!= col(b) else col(a) < col(b))
+      .select(col(a), col(b))
+      .distinct() // a pair can share several cells
+  }
+
+  /** `pairs` joined to both vectors' floats (`ea`, `eb`) and scored by
+    * rounded exact cosine `cos_sim`. */
+  private def pairCosine(pairs: DataFrame, embeddings: DataFrame, a: String,
+                         b: String): DataFrame = {
+    val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+    pairs
+      .join(e.select(col("vec_id").as(a), col("e").as("ea")), a)
+      .join(e.select(col("vec_id").as(b), col("e").as("eb")), b)
+      .withColumn("cos_sim", roundn(fastCosine(col("ea"), col("eb")), 6))
   }
 
   /** SemDeDup-style selection (Abbas et al., arXiv 2303.09540):
@@ -195,24 +211,14 @@ object VectorOps {
     * on the uniform anchor id, nothing driver-side. */
   def hardNegatives(embeddings: DataFrame, nAssign: Int = 2,
                     centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(labelCells(embeddings))
-    val assigned = nearestCells(embeddings, cent, "id", nAssign)
     val lab = embeddings.select(col("vec_id"), col("label"))
-    val cand = assigned.select(col("id").as("anchor_id"), col("c_label"))
-      .join(assigned.select(col("id").as("neg_id"), col("c_label")), "c_label")
-      .filter(col("anchor_id") =!= col("neg_id"))
-      .select(col("anchor_id"), col("neg_id"))
-      .distinct() // a pair can share several cells
+    val cand = cellPairs(embeddings, centroids, nAssign, "anchor_id", "neg_id", directed = true)
       .join(lab.select(col("vec_id").as("anchor_id"), col("label").as("anchor_label")), "anchor_id")
       .join(lab.select(col("vec_id").as("neg_id"), col("label").as("neg_label")), "neg_id")
       .filter(col("anchor_label") =!= col("neg_label"))
-    val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val w = Window.partitionBy(col("anchor_id"))
       .orderBy(col("cos_sim").desc, col("neg_id"))
-    cand
-      .join(e.select(col("vec_id").as("anchor_id"), col("e").as("ea")), "anchor_id")
-      .join(e.select(col("vec_id").as("neg_id"), col("e").as("eb")), "neg_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("ea"), col("eb")), 6))
+    pairCosine(cand, embeddings, "anchor_id", "neg_id")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("anchor_id"), col("anchor_label"), col("neg_id"),
@@ -236,22 +242,14 @@ object VectorOps {
     * to normalize the −0.0 corner. */
   def tripletMining(embeddings: DataFrame, nAssign: Int = 2,
                     centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(labelCells(embeddings))
-    val assigned = nearestCells(embeddings, cent, "id", nAssign)
     val lab = embeddings.select(col("vec_id"), col("label"))
-    val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val scored = assigned.select(col("id").as("anchor_id"), col("c_label"))
-      .join(assigned.select(col("id").as("other_id"), col("c_label")), "c_label")
-      .filter(col("anchor_id") =!= col("other_id"))
-      .select(col("anchor_id"), col("other_id"))
-      .distinct() // a pair can share several cells
+    val labelled = cellPairs(embeddings, centroids, nAssign, "anchor_id", "other_id",
+        directed = true)
       .join(lab.select(col("vec_id").as("anchor_id"), col("label").as("anchor_label")),
         "anchor_id")
       .join(lab.select(col("vec_id").as("other_id"), col("label").as("other_label")),
         "other_id")
-      .join(e.select(col("vec_id").as("anchor_id"), col("e").as("ea")), "anchor_id")
-      .join(e.select(col("vec_id").as("other_id"), col("e").as("eb")), "other_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("ea"), col("eb")), 6))
+    val scored = pairCosine(labelled, embeddings, "anchor_id", "other_id")
       .select(col("anchor_id"), col("anchor_label"), col("other_id"),
         col("other_label"), col("cos_sim"))
       .localCheckpoint(false)
@@ -398,12 +396,9 @@ object VectorOps {
   def annTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    c.crossJoin(broadcast(q))
+    topK(c.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6)), k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
   }
 
@@ -427,18 +422,18 @@ object VectorOps {
     */
   def annQuantizedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                        rerankFactor: Int = 4): DataFrame = {
+    adcBudgetRerank(sq8Candidates(corpus, queries), corpus, queries, k, rerankFactor)
+  }
+
+  /** Every (query, vector) pair of the flat int8 scan with its exact
+    * integer code distance: `(query_id, vec_id, qdist, …)`. */
+  private def sq8Candidates(corpus: DataFrame, queries: DataFrame): DataFrame = {
     val scale = symmetricScale(corpus)
     val codes = quantizedCodes(corpus, scale, "vec_id", "qc")
     val qcodes = quantizedCodes(queries, scale, "query_id", "qq")
-
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
-    val cand = codes.crossJoin(broadcast(qcodes))
+    codes.crossJoin(broadcast(qcodes))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("qdist", intL2Sq(col("qc"), col("qq")))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
   }
 
   /** The full production ANN funnel — IVF × scalar quantization
@@ -464,15 +459,10 @@ object VectorOps {
     val scale = symmetricScale(corpus)
     val codes = quantizedCodes(corpus, scale, "vec_id", "qc")
     val qcodes = quantizedCodes(queries, scale, "query_id", "qq")
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
-    val cand = candidates
+    adcBudgetRerank(candidates
       .join(codes, "vec_id")
       .join(broadcast(qcodes), "query_id")
-      .withColumn("qdist", intL2Sq(col("qc"), col("qq")))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
+      .withColumn("qdist", intL2Sq(col("qc"), col("qq"))), corpus, queries, k, rerankFactor)
   }
 
   /** Product quantization top-k (ADC form, Jégou et al. TPAMI'11) —
@@ -562,18 +552,13 @@ object VectorOps {
     d / m
   }
 
-  /** The k·rerankFactor ADC budget window per query over
+  /** The k·rerankFactor code-distance budget window per query over
     * `(query_id, vec_id, qdist)` candidates, then the exact-cosine
-    * rerank ([[exactCosRerank]], floats only on survivors). */
+    * rerank ([[refineTopK]], floats only on survivors). */
   private def adcBudgetRerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
-                              k: Int, rerankFactor: Int): DataFrame = {
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
-    exactCosRerank(cand
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
+                              k: Int, rerankFactor: Int): DataFrame =
+    refineTopK(budgetWindow(cand, k * rerankFactor)
       .select(col("query_id"), col("vec_id"), col("qdist")), corpus, queries, k)
-  }
-
 
   /** Shared candidate generator for the residual-IVFADC pair
     * ([[ivfPqTopK]] / [[ivfPqRecallCurve]]): every (query, vector)
@@ -659,7 +644,7 @@ object VectorOps {
     (pqc, codes)
   }
 
-  /** PQ seed-selection precondition (r14 ADVICE): `vec_id < ksub`
+  /** PQ seed-selection precondition: `vec_id < ksub`
     * seeding assumes DENSE ids from 0 — an offset/sparse-id corpus
     * would silently train a degenerate (or empty) codebook. Enforced
     * eagerly at index-build time (build already pays a `.head()` for
@@ -788,7 +773,7 @@ object VectorOps {
 
   /** Residual IVFADC top-k — see [[ivfPqCandidates]] for the funnel;
     * this applies the k·rerankFactor ADC budget and the exact-cosine
-    * rerank ([[exactCosRerank]], floats only on survivors). */
+    * rerank ([[adcBudgetRerank]]). */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, nProbe: Int, k: Int,
                 centroids: Option[DataFrame] = None,
                 m: Int = 8, ksub: Int = 16, iters: Int = 2,
@@ -806,46 +791,23 @@ object VectorOps {
                        nProbe: Int = 3,
                        centroids: Option[DataFrame] = None,
                        index: Option[(DataFrame, DataFrame)] = None,
-                       groundTruth: Option[DataFrame] = None,
                        m: Int = 8, ksub: Int = 16): DataFrame = {
     val queries = corpus.filter(col("vec_id") < nQueries)
-    val exact = groundTruth.getOrElse(annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val maxF = factors.max
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
+    val exact = exactNeighbors(corpus, queries, k)
     val cent = centroids.getOrElse(sqrtCells(corpus, iters = 2)).localCheckpoint(false)
-    // the receipt measures the FAMILY's index — consumers may hand in
-    // the shared persisted artifacts (the lang_confusion_learned
-    // amortization; the oracle retrains from scratch, so a stale
-    // artifact is a red row, never a silent pass)
-    // m/ksub describe the SUPPLIED index's shape too — a codebook
-    // trained at a different (m, ksub) must be scored with its own
-    // LUT keys, never the defaults (r14 ADVICE: hardcoded 8/16 here
-    // would silently mis-key a differently-shaped index)
+    // the receipt measures the family's index — consumers may hand in
+    // the shared persisted artifacts (the oracle retrains from scratch,
+    // so a stale artifact is a red row, never a silent pass). m/ksub
+    // describe the SUPPLIED index's shape: a codebook trained at
+    // another (m, ksub) must be scored with its own LUT keys, or a
+    // differently-shaped index is silently mis-keyed
     val (pqCodebook, codes) = index.getOrElse(
       ivfPqIndex(corpus, cent, m = m, ksub = ksub, iters = 2))
-    val scored = ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes,
-      m = m, ksub = ksub)
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * maxF)
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"), col("qrank"), col("cos_sim"))
-      .localCheckpoint(false)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    val curve = factors.map { f =>
-      scored.filter(col("qrank") <= k * f)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("ivfpq"))
-        .withColumn("param", lit(f.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    val scored = refine(budgetWindow(
+        ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes, m = m, ksub = ksub),
+        k * factors.max).select(col("query_id"), col("vec_id"), col("qrank")),
+      corpus, queries).localCheckpoint(false)
+    recallCurve(exact, "ivfpq", factors, k)(f => scored.filter(col("qrank") <= k * f))
   }
 
   /** Build-time quantization scale: one scalar (max |component|) over
@@ -871,21 +833,75 @@ object VectorOps {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0L), (acc, x) => acc + x)
 
-  /** Exact rerank: float vectors are touched only for candidate rows
-    * — a k·rerankFactor-per-query equi-join, never a second flat
-    * scan. `cand` carries (query_id, vec_id, qdist). */
-  private def exactCosRerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
-                             k: Int): DataFrame = {
+  /** The refine step every ANN candidate filter ends in: candidate
+    * rows `(query_id, vec_id, extra…)` meet the corpus floats on
+    * vec_id and the broadcast query floats on query_id and score by
+    * rounded exact cosine — floats are touched only for candidates,
+    * never in a second flat scan. Output `(query_id, vec_id, extra…,
+    * cos_sim)`. */
+  private def refine(cand: DataFrame, corpus: DataFrame, queries: DataFrame): DataFrame = {
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val wr = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
     cand
       .join(c, "vec_id")
       .join(broadcast(q), "query_id")
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(wr).cast("long"))
+      .drop("e", "qe")
+  }
+
+  /** [[refine]] cut to each query's top k: `(query_id, rank, vec_id,
+    * extra…, cos_sim)`. */
+  private def refineTopK(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+                         k: Int): DataFrame =
+    topK(refine(cand, corpus, queries), k)
+      .select((Seq("query_id", "rank") ++ cand.columns.filter(_ != "query_id") :+ "cos_sim")
+        .map(col): _*)
+
+  /** Per query, the k rows of highest `score`, ties on vec_id — ranked
+    * on the ROUNDED score so a 1-ulp difference cannot flip the set. */
+  private def topK(scored: DataFrame, k: Int, score: Column = col("cos_sim")): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(score.desc, col("vec_id"))).cast("long"))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("qdist"), col("cos_sim"))
+
+  /** Per query, the `n` candidates of smallest code distance `qdist`
+    * (vec_id tie-break) with their rank `qrank` — the rerank budget of
+    * the quantized tiers. */
+  private def budgetWindow(cand: DataFrame, n: Int): DataFrame =
+    cand
+      .withColumn("qrank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))))
+      .filter(col("qrank") <= n)
+
+  /** The brute-force ground truth of the recall receipts: [[annTopK]]'s
+    * `(query_id, vec_id)`, pinned — every curve point joins it. */
+  private[graft] def exactNeighbors(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    annTopK(corpus, queries, k).select(col("query_id"), col("vec_id")).localCheckpoint(false)
+
+  /** The recall receipt of one candidate filter: per budget `p`, the
+    * top k of the rows `admitted(p)` lets through (ranked by
+    * `score(p)`), hit-joined against the `exact` ground truth — one
+    * (method, param, n_returned, n_hits, n_exact, recall) row per
+    * budget. Each filter scores its candidates ONCE at its loosest
+    * budget; a curve point is a filter + re-rank of that table. */
+  private def recallCurve(exact: DataFrame, method: String, params: Seq[Int], k: Int)(
+      admitted: Int => DataFrame, score: Int => Column = _ => col("cos_sim")): DataFrame = {
+    val nExact = exact.agg(count(lit(1)).as("n_exact"))
+    params.map { p =>
+      topK(admitted(p), k, score(p))
+        .select(col("query_id"), col("vec_id"))
+        .withColumn("method", lit(method))
+        .withColumn("param", lit(p.toLong))
+    }.reduce(_ unionByName _)
+      .join(exact.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
+      .groupBy(col("method"), col("param"))
+      .agg(count(lit(1)).as("n_returned"),
+        coalesce(sum(col("hit")), lit(0)).cast("long").as("n_hits"))
+      .crossJoin(broadcast(nExact))
+      .withColumn("recall", roundn(col("n_hits") / col("n_exact").cast("double"), 6))
+      .select(col("method"), col("param"), col("n_returned"), col("n_hits"),
+        col("n_exact"), col("recall"))
   }
 
   /** Per-vector stats via ARRAY higher-order folds (`aggregate` /
@@ -1218,24 +1234,12 @@ object VectorOps {
     * 1-row-per-query build side, rank window per query. */
   def ivfTopKFromIndex(corpus: DataFrame, queries: DataFrame, assigned: DataFrame,
                        cent: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    val probes = nearestCells(queries, cent, "query_id", nProbe)
-
-    val candidates = probes
+    val candidates = nearestCells(queries, cent, "query_id", nProbe)
       .join(assigned, "c_label")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct() // a (query, vec) pair can meet in several cells
-
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    candidates
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
+    refineTopK(candidates, corpus, queries, k)
   }
 
   /** Incremental ANN ingest — the reference's defining maintenance
@@ -1298,7 +1302,8 @@ object VectorOps {
     * oracle-pinned query (the way `bpe_vocab_size` pins training
     * depth): for each probe budget, recall@k of [[ivfTopK]] over the
     * √N Lloyd codebook (nAssign = 1 so the curve isolates the probe
-    * axis) against the exact [[annTopK]] ground truth. Both sides are
+    * axis) against the exact [[annTopK]] ground truth
+    * ([[exactNeighbors]] of the same queries). Both sides are
     * recomputed exactly by the DuckDB twin — the receipt is not a
     * stored number but a replayable measurement, so a quantizer or
     * probe-policy regression shows up as a hash mismatch.
@@ -1309,116 +1314,49 @@ object VectorOps {
     * undershoot is part of what the curve documents.
     *
     * Scale shape: the exact side is the one cross join (queries
-    * broadcast — the receipt's cost is the ground truth, exactly as
-    * in [[graft.ops.SkewOps.keySkewProfile]]-style verification
-    * twins); the approximate side is computed ONCE for the whole
-    * curve, not once per point: with nAssign = 1 a (query, vec)
-    * candidate pair meets through exactly one cell, whose probe rank
-    * for that query is the SMALLEST budget that reaches the pair
-    * (`first_probe`) — so the corpus assignment, the query probe
-    * ranks, and every pairwise cosine are evaluated a single time
-    * and each curve point is a `first_probe <= p` filter + re-rank
-    * over the same checkpointed scored table (measured 6.3 → ~2 s at
-    * sf0.1 vs the ivfTopK-per-point form; output identical, which
-    * the unchanged oracle pins). */
-  def annRecallCurve(corpus: DataFrame, queries: DataFrame, k: Int = 3,
-                     nProbes: Seq[Int] = Seq(1, 2, 3),
-                     groundTruth: Option[DataFrame] = None): DataFrame = {
-    val exact = groundTruth.getOrElse(annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
+    * broadcast — the receipt's cost is the ground truth); the
+    * approximate side is computed ONCE for the whole curve, not once
+    * per point: with nAssign = 1 a (query, vec) candidate pair meets
+    * through exactly one cell, whose probe rank for that query is the
+    * SMALLEST budget that reaches the pair (`first_probe`) — so the
+    * corpus assignment, the query probe ranks, and every pairwise
+    * cosine are evaluated a single time and each curve point is a
+    * `first_probe <= p` filter + re-rank over the same checkpointed
+    * scored table. */
+  def annRecallCurve(corpus: DataFrame, queries: DataFrame, groundTruth: DataFrame,
+                     k: Int = 3, nProbes: Seq[Int] = Seq(1, 2, 3)): DataFrame = {
     val cent = sqrtCells(corpus, iters = 2).localCheckpoint(false)
-    val maxP = nProbes.max
     val assigned = nearestCells(corpus, cent, "vec_id", 1)
     val probes = cellRanks(queries, cent, "query_id")
-      .filter(col("cell_rank") <= maxP)
+      .filter(col("cell_rank") <= nProbes.max)
       .select(col("query_id"), col("c_label"), col("cell_rank"))
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = probes.join(assigned, "c_label")
+    val scored = refine(probes.join(assigned, "c_label")
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
-      .agg(min(col("cell_rank")).as("first_probe"))
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"), col("first_probe"), col("cos_sim"))
+      .agg(min(col("cell_rank")).as("first_probe")), corpus, queries)
       .localCheckpoint(false)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    val curve = nProbes.map { p =>
-      scored.filter(col("first_probe") <= p)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("ivf"))
-        .withColumn("param", lit(p.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    recallCurve(groundTruth, "ivf", nProbes, k)(p => scored.filter(col("first_probe") <= p))
   }
-
-  /** Shared receipt tail: hit-join a (method, param, query_id,
-    * vec_id) curve against the exact ground truth and collapse to
-    * one recall row per (method, param). */
-  private def recallAgg(curve: DataFrame, exact: DataFrame, nExact: DataFrame): DataFrame =
-    curve
-      .join(exact.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy(col("method"), col("param"))
-      .agg(count(lit(1)).as("n_returned"),
-        coalesce(sum(col("hit")), lit(0)).cast("long").as("n_hits"))
-      .crossJoin(broadcast(nExact))
-      .withColumn("recall", roundn(col("n_hits") / col("n_exact").cast("double"), 6))
-      .select(col("method"), col("param"), col("n_returned"), col("n_hits"),
-        col("n_exact"), col("recall"))
 
   /** SRP leg of the recall receipt — recall-vs-bands for [[srpTopK]]'s
     * hyperplane-bit index, same schema as [[annRecallCurve]] (method
-    * 'srp', param = band budget). Mirrors the first_probe trick: a
+    * 'srp', param = band budget) against the ground truth of the
+    * queries `vec_id < nQueries`. Mirrors the first_probe trick: a
     * candidate pair's FIRST matching band index is the smallest band
     * budget that reaches it, so signatures, the bucket join, and every
     * candidate cosine are computed once and each curve point is a
     * `first_band < b` filter + re-rank over the same checkpointed
     * table. */
-  def srpRecallCurve(corpus: DataFrame, k: Int = 3,
+  def srpRecallCurve(corpus: DataFrame, groundTruth: DataFrame, k: Int = 3,
                      bands: Seq[Int] = Seq(2, 4, 8), outDim: Int = 32,
-                     bandBits: Int = 4, nQueries: Int = 10,
-                     groundTruth: Option[DataFrame] = None): DataFrame = {
-    val queries = corpus.filter(col("vec_id") < nQueries)
-    // ann_recall computes both method curves against ONE ground
-    // truth — the brute-force side is the receipt's dominant cost,
-    // so the ivf leg's checkpointed exact table is reused here
-    val exact = groundTruth.getOrElse(annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val sig = randomProject(corpus, outDim)
-      .withColumn("bit", (col("proj") > 0).cast("long"))
-      .withColumn("band", floor(col("out_dim") / bandBits).cast("long"))
-      .groupBy(col("vec_id"), col("band"))
-      .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
-        .as("band_sig"))
-    val qsig = sig.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
-    val pairs = qsig.join(sig, Seq("band", "band_sig"))
-      .filter(col("vec_id") =!= col("query_id"))
+                     bandBits: Int = 4, nQueries: Int = 10): DataFrame = {
+    val sig = srpSignatures(srpBits(corpus, outDim, bandBits), bandBits)
+    val pairs = srpHits(sig, nQueries, flip = None)
       .groupBy(col("query_id"), col("vec_id"))
       .agg(min(col("band")).as("first_band"))
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val qe = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = pairs
-      .join(c, "vec_id")
-      .join(broadcast(qe), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"), col("first_band"), col("cos_sim"))
+    val scored = refine(pairs, corpus, corpus.filter(col("vec_id") < nQueries))
       .localCheckpoint(false)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    val curve = bands.map { b =>
-      scored.filter(col("first_band") < b)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("srp"))
-        .withColumn("param", lit(b.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    recallCurve(groundTruth, "srp", bands, k)(b => scored.filter(col("first_band") < b))
   }
 
   /** Scalar-quantization recall receipt — the BYTES axis of the
@@ -1438,40 +1376,13 @@ object VectorOps {
     * (rounded cos desc, vec_id) — [[annQuantizedTopK]]'s exact
     * decision path. */
   def sq8RecallCurve(corpus: DataFrame, k: Int = 3,
-                     factors: Seq[Int] = Seq(1, 2, 4), nQueries: Int = 10,
-                     groundTruth: Option[DataFrame] = None): DataFrame = {
+                     factors: Seq[Int] = Seq(1, 2, 4), nQueries: Int = 10): DataFrame = {
     val queries = corpus.filter(col("vec_id") < nQueries)
-    val exact = groundTruth.getOrElse(annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val maxF = factors.max
-    val scale = symmetricScale(corpus)
-    val codes = quantizedCodes(corpus, scale, "vec_id", "qc")
-    val qcodes = quantizedCodes(queries, scale, "query_id", "qq")
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = codes.crossJoin(broadcast(qcodes))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("qdist", intL2Sq(col("qc"), col("qq")))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * maxF)
-      .select(col("query_id"), col("vec_id"), col("qrank"))
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"), col("qrank"), col("cos_sim"))
+    val exact = exactNeighbors(corpus, queries, k)
+    val scored = refine(budgetWindow(sq8Candidates(corpus, queries), k * factors.max)
+      .select(col("query_id"), col("vec_id"), col("qrank")), corpus, queries)
       .localCheckpoint(false)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    val curve = factors.map { f =>
-      scored.filter(col("qrank") <= k * f)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("sq8"))
-        .withColumn("param", lit(f.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    recallCurve(exact, "sq8", factors, k)(f => scored.filter(col("qrank") <= k * f))
   }
 
   /** Matryoshka truncation receipt — the dimension axis of the
@@ -1499,9 +1410,7 @@ object VectorOps {
                        dims: Seq[Int] = Seq(8, 16, 32),
                        nQueries: Int = 10): DataFrame = {
     val queries = corpus.filter(col("vec_id") < nQueries)
-    val exact = annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false)
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
+    val exact = exactNeighbors(corpus, queries, k)
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
     val scored = c.crossJoin(broadcast(q))
@@ -1510,17 +1419,7 @@ object VectorOps {
         roundn(fastCosine(slice(col("e"), 1, d), slice(col("qe"), 1, d)), 6)
           .as(s"cos_$d")): _*)
       .localCheckpoint(false)
-    val curve = dims.map { d =>
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col(s"cos_$d").desc, col("vec_id"))
-      scored
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("trunc"))
-        .withColumn("param", lit(d.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    recallCurve(exact, "trunc", dims, k)(_ => scored, d => col(s"cos_$d"))
   }
 
   /** Embedding-space outlier screen — the mislabeled-data detector a
@@ -1604,41 +1503,16 @@ object VectorOps {
     * bits), then exact-cosine rerank of the candidates only.
     *
     * Scale shape: signatures are map-only (the projection is a
-    * literal-matrix fold); candidates come from an EQUI-JOIN on
-    * (band, band_sig) — bounded buckets under uniform hashes;
-    * reranking touches floats only for candidate pairs; per-query
-    * top-k is a window over candidates. The probability knob is
-    * bands×bits: more bands → recall, longer bands → precision. */
+    * literal-matrix fold); candidates ([[srpCandidates]]) come from an
+    * EQUI-JOIN on (band, band_sig) — bounded buckets under uniform
+    * hashes; reranking touches floats only for candidate pairs;
+    * per-query top-k is a window over candidates. The probability
+    * knob is bands×bits: more bands → recall, longer bands →
+    * precision. */
   def srpTopK(embeddings: DataFrame, k: Int = 3, nQueries: Int = 10,
-              outDim: Int = 32, bandBits: Int = 4): DataFrame = {
-    val sig = randomProject(embeddings, outDim)
-      .withColumn("bit", (col("proj") > 0).cast("long"))
-      .withColumn("band", floor(col("out_dim") / bandBits).cast("long"))
-      .groupBy(col("vec_id"), col("band"))
-      .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
-        .as("band_sig"))
-      // sig feeds BOTH the query side and the corpus side of the
-      // candidate join — without this the 32-fold literal-matrix
-      // projection re-evaluates over the full corpus per use
-      .localCheckpoint(false)
-    val q = sig.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
-    val cand = q.join(sig, Seq("band", "band_sig"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id")).distinct()
-    val c = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val qe = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    cand
-      .join(c, "vec_id")
-      .join(broadcast(qe), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
-  }
+              outDim: Int = 32, bandBits: Int = 4): DataFrame =
+    refineTopK(srpCandidates(embeddings, multiProbe = false, nQueries, outDim, bandBits),
+      embeddings, embeddings.filter(col("vec_id") < nQueries), k)
 
   /** Multi-probe SRP-LSH (Lv et al., VLDB'07 applied to the Charikar
     * signature): [[srpTopK]] probes only each query's HOME bucket per
@@ -1655,83 +1529,58 @@ object VectorOps {
     * bandBits rows) — the probe union doubles only the QUERY side of
     * the candidate equi-join, never the corpus signatures. */
   def srpMultiProbeTopK(embeddings: DataFrame, k: Int = 3, nQueries: Int = 10,
-                        outDim: Int = 32, bandBits: Int = 4): DataFrame = {
-    // proj feeds sig AND the flip table; sig feeds the home probes
-    // AND the corpus side of the candidate join — checkpoint both so
-    // the corpus-wide projection evaluates exactly once
-    val proj = randomProject(embeddings, outDim)
-      .withColumn("bit", (col("proj") > 0).cast("long"))
-      .withColumn("band", floor(col("out_dim") / bandBits).cast("long"))
-      .localCheckpoint(false)
-    val sig = proj
-      .groupBy(col("vec_id"), col("band"))
-      .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
-        .as("band_sig"))
-      .localCheckpoint(false)
-    val flip = proj.filter(col("vec_id") < nQueries)
+                        outDim: Int = 32, bandBits: Int = 4): DataFrame =
+    refineTopK(srpCandidates(embeddings, multiProbe = true, nQueries, outDim, bandBits),
+      embeddings, embeddings.filter(col("vec_id") < nQueries), k)
+
+  /** The SRP candidate generator of [[srpTopK]] (home probes) and
+    * [[srpMultiProbeTopK]] (plus one flipped probe per band):
+    * distinct `(query_id, vec_id)` pairs for the queries
+    * `vec_id < nQueries`. */
+  private[graft] def srpCandidates(embeddings: DataFrame, multiProbe: Boolean,
+                                   nQueries: Int = 10, outDim: Int = 32,
+                                   bandBits: Int = 4): DataFrame = {
+    // the projection is corpus-wide: pin sig, which feeds both sides of
+    // the bucket join, and for multi-probe the bits too, which feed sig
+    // AND the flip table — each evaluates exactly once
+    val bits = srpBits(embeddings, outDim, bandBits)
+    val proj = if (multiProbe) bits.localCheckpoint(false) else bits
+    val sig = srpSignatures(proj, bandBits).localCheckpoint(false)
+    val flip = if (!multiProbe) None else Some(proj.filter(col("vec_id") < nQueries)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id"), col("band"))
           .orderBy(abs(col("proj")), col("out_dim"))))
       .filter(col("rn") === 1)
-      .select(col("vec_id"), col("band"),
-        (col("out_dim") % bandBits).as("flip_pos"))
-    val home = sig.filter(col("vec_id") < nQueries)
-    val probes = home
-      .select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
-      .unionByName(home.join(flip, Seq("vec_id", "band"))
-        .select(col("vec_id").as("query_id"), col("band"),
-          expr("band_sig ^ shiftleft(1L, cast(flip_pos as int))").as("band_sig")))
-    val cand = probes.join(sig, Seq("band", "band_sig"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id")).distinct()
-    val c = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val qe = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    cand
-      .join(c, "vec_id")
-      .join(broadcast(qe), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
+      .select(col("vec_id"), col("band"), (col("out_dim") % bandBits).as("flip_pos")))
+    srpHits(sig, nQueries, flip).select(col("query_id"), col("vec_id")).distinct()
   }
 
-  /** The candidate sets of the single- and multi-probe SRP tiers for
-    * the same queries — the superset receipt [[srpMultiProbeTopK]]'s
-    * spec pins (exposed for tests; not a declared query). */
-  private[graft] def srpCandidates(embeddings: DataFrame, multiProbe: Boolean,
-                                   nQueries: Int = 10, outDim: Int = 32,
-                                   bandBits: Int = 4): DataFrame = {
-    // same lineage hygiene as the declared tiers: the projection is
-    // corpus-wide, so pin it (and sig) before the multi-use fan-out
-    val proj = randomProject(embeddings, outDim)
+  /** The sign bits of [[randomProject]]'s coordinates, `bandBits` to a
+    * band: `(vec_id, out_dim, proj, bit, band)`. */
+  private def srpBits(embeddings: DataFrame, outDim: Int, bandBits: Int): DataFrame =
+    randomProject(embeddings, outDim)
       .withColumn("bit", (col("proj") > 0).cast("long"))
       .withColumn("band", floor(col("out_dim") / bandBits).cast("long"))
-      .localCheckpoint(false)
-    val sig = proj
-      .groupBy(col("vec_id"), col("band"))
+
+  /** Each band's bits as one integer: `(vec_id, band, band_sig)`. */
+  private def srpSignatures(bits: DataFrame, bandBits: Int): DataFrame =
+    bits.groupBy(col("vec_id"), col("band"))
       .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
         .as("band_sig"))
-      .localCheckpoint(false)
+
+  /** Probe buckets meeting the corpus signatures, self-matches
+    * excluded: every `(band, band_sig, query_id, vec_id)` hit of the
+    * queries `vec_id < nQueries` — their home bucket per band, plus the
+    * bucket with the `flip_pos` bit flipped when a flip table is
+    * given. */
+  private def srpHits(sig: DataFrame, nQueries: Int, flip: Option[DataFrame]): DataFrame = {
     val home = sig.filter(col("vec_id") < nQueries)
     val base = home.select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
-    val probes = if (!multiProbe) base else {
-      val flip = proj.filter(col("vec_id") < nQueries)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("vec_id"), col("band"))
-            .orderBy(abs(col("proj")), col("out_dim"))))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("band"),
-          (col("out_dim") % bandBits).as("flip_pos"))
-      base.unionByName(home.join(flip, Seq("vec_id", "band"))
-        .select(col("vec_id").as("query_id"), col("band"),
-          expr("band_sig ^ shiftleft(1L, cast(flip_pos as int))").as("band_sig")))
-    }
+    val probes = flip.fold(base)(f => base.unionByName(home.join(f, Seq("vec_id", "band"))
+      .select(col("vec_id").as("query_id"), col("band"),
+        expr("band_sig ^ shiftleft(1L, cast(flip_pos as int))").as("band_sig"))))
     probes.join(sig, Seq("band", "band_sig"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id")).distinct()
   }
 
   /** EMBEDDING DRIFT monitor — the vector member of the drift family
@@ -1985,8 +1834,8 @@ object VectorOps {
     * NEIGHBORS' and only flags points sparser than their own
     * neighborhood (LOF >> 1).
     *
-    * Candidates come from the IVF cell co-residency join (the
-    * [[similarityJoinIvf]] generator, directed) — never all pairs.
+    * Candidates come from the IVF cell co-residency join
+    * ([[cellPairs]]) — never all pairs.
     * kNN keeps exactly the first k by (rounded distance, id) — the
     * deterministic tie policy in place of the classic
     * all-ties-at-k-distance set, stated not hidden. reach-dist =
@@ -2003,15 +1852,9 @@ object VectorOps {
     * uniform point id; top-N = TakeOrderedAndProject. */
   def lofOutliers(embeddings: DataFrame, k: Int = 5, nAssign: Int = 2,
                   topN: Int = 20, centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(labelCells(embeddings))
-    val assigned = nearestCells(embeddings, cent, "id", nAssign)
     // distances once per UNDIRECTED pair (L2 is symmetric), mirrored
     // after the kernel — halves the fold work on both engines
-    val cand = assigned.select(col("id").as("p_id"), col("c_label"))
-      .join(assigned.select(col("id").as("o_id"), col("c_label")), "c_label")
-      .filter(col("p_id") < col("o_id"))
-      .select(col("p_id"), col("o_id"))
-      .distinct()
+    val cand = cellPairs(embeddings, centroids, nAssign, "p_id", "o_id", directed = false)
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val distU = cand
       .join(e.select(col("vec_id").as("p_id"), col("e").as("ep")), "p_id")

@@ -245,7 +245,21 @@ class VectorOpsSpec extends SparkSpec {
       "every cell probed + k*f >= corpus: ADC candidates cover everything, " +
         "the exact rerank equals the ground truth")
     assert(r(1L)._1 === 6L && r(10L)._1 === 6L, "k results per query at every budget")
+    // the IVF probe axis on the same corpus: √16 = 4 cells, so 4 probes
+    // reach every cell and the exact rerank is the ground truth
+    val q = all.filter($"vec_id" < 3)
+    val ivf = curvePoints(VectorOps.annRecallCurve(all, q,
+      VectorOps.exactNeighbors(all, q, 2), k = 2, nProbes = Seq(1, 4)))
+    assert(ivf(1L)._4 <= ivf(4L)._4, "recall is monotone in the probe budget")
+    assert(ivf(4L)._4 === 1.0, "every cell probed: the candidates cover the corpus")
+    assert(ivf(4L)._1 === 6L && ivf(4L)._3 === 6L)
   }
+
+  /** param -> (n_returned, n_hits, n_exact, recall) of a recall curve. */
+  private def curvePoints(curve: org.apache.spark.sql.DataFrame) = curve.collect()
+    .map(x => x.getAs[Long]("param") ->
+      ((x.getAs[Long]("n_returned"), x.getAs[Long]("n_hits"),
+        x.getAs[Long]("n_exact"), x.getAs[Double]("recall")))).toMap
 
   test("indexMaintenancePlan: one row; price consistent with the census; boolean honors tau") {
     val all = (0L until 20L).map { i =>
@@ -570,6 +584,19 @@ class VectorOpsSpec extends SparkSpec {
       "k*f >= corpus: every candidate gets the exact rerank, recall is 1 by construction")
     assert(r(1L)._4 <= r(10L)._4, "recall is monotone in the rerank budget")
     assert(r(1L)._1 === 6L && r(10L)._1 === 6L, "k results per query at every budget")
+    // the SRP band axis (randomProject signs 64 input dims): a shared
+    // positive offset puts every vector on the same side of most
+    // hyperplanes, so at the full 8-band budget every pair shares a
+    // bucket and the exact rerank is the ground truth
+    val wide = (0 until 20).map { i =>
+      (i.toLong, Array.tabulate(64)(j => 1f + ((i * 7 + j * 3) % 11) / 20f), 0)
+    }.toDF("vec_id", "embedding", "label")
+    val srp = curvePoints(VectorOps.srpRecallCurve(wide,
+      VectorOps.exactNeighbors(wide, wide.filter($"vec_id" < 3), 2),
+      k = 2, bands = Seq(1, 8), nQueries = 3))
+    assert(srp(1L)._4 <= srp(8L)._4, "recall is monotone in the band budget")
+    assert(srp(8L)._4 === 1.0, "every band probed: the candidates cover the corpus")
+    assert(srp(8L)._1 === 6L && srp(8L)._3 === 6L)
   }
 
   test("tripletMining: hardest positive and negative per anchor; lonely labels drop; margins can invert") {
