@@ -1302,8 +1302,10 @@ object VectorOps {
     * oracle-pinned query (the way `bpe_vocab_size` pins training
     * depth): for each probe budget, recall@k of [[ivfTopK]] over the
     * √N Lloyd codebook (nAssign = 1 so the curve isolates the probe
-    * axis) against the exact [[annTopK]] ground truth
-    * ([[exactNeighbors]] of the same queries). Both sides are
+    * axis) against the exact [[annTopK]] ground truth. Contract:
+    * `groundTruth` must be `exactNeighbors(corpus, queries, k)` with
+    * this call's corpus, queries and k — a truth built for other
+    * queries or another k yields a wrong curve, unchecked. Both sides are
     * recomputed exactly by the DuckDB twin — the receipt is not a
     * stored number but a replayable measurement, so a quantizer or
     * probe-policy regression shows up as a hash mismatch.
@@ -1340,8 +1342,11 @@ object VectorOps {
 
   /** SRP leg of the recall receipt — recall-vs-bands for [[srpTopK]]'s
     * hyperplane-bit index, same schema as [[annRecallCurve]] (method
-    * 'srp', param = band budget) against the ground truth of the
-    * queries `vec_id < nQueries`. Mirrors the first_probe trick: a
+    * 'srp', param = band budget) for the queries `vec_id < nQueries`.
+    * Contract: `groundTruth` must be `exactNeighbors(corpus,
+    * corpus.filter(vec_id < nQueries), k)` with this call's corpus,
+    * nQueries and k — a truth built for other queries or another k
+    * yields a wrong curve, unchecked. Mirrors the first_probe trick: a
     * candidate pair's FIRST matching band index is the smallest band
     * budget that reaches it, so signatures, the bucket join, and every
     * candidate cosine are computed once and each curve point is a

@@ -234,12 +234,8 @@ class VectorOpsSpec extends SparkSpec {
         ((i * 3) % 7).toFloat / 2f, ((i * 5) % 9).toFloat / 4f).toSeq, 0)
     }.toDF("vec_id", "embedding", "label")
     val cent = VectorOps.kmeansCells(all, k = 2, iters = 2)
-    val r = VectorOps.ivfPqRecallCurve(all, k = 2, factors = Seq(1, 10),
-        nQueries = 3, nProbe = 2, centroids = Some(cent))
-      .collect()
-      .map(x => x.getAs[Long]("param") ->
-        ((x.getAs[Long]("n_returned"), x.getAs[Long]("n_hits"),
-          x.getAs[Long]("n_exact"), x.getAs[Double]("recall")))).toMap
+    val r = curvePoints(VectorOps.ivfPqRecallCurve(all, k = 2, factors = Seq(1, 10),
+        nQueries = 3, nProbe = 2, centroids = Some(cent)))
     assert(r(1L)._4 <= r(10L)._4, "recall is monotone in the rerank budget")
     assert(r(10L)._4 === 1.0,
       "every cell probed + k*f >= corpus: ADC candidates cover everything, " +
@@ -574,11 +570,7 @@ class VectorOpsSpec extends SparkSpec {
       (i.toLong, Array((i % 7).toFloat - 3f, (i % 5).toFloat - 2f,
         (i % 3).toFloat - 1f, (i % 11).toFloat / 3f), 0)
     }.toDF("vec_id", "embedding", "label")
-    val r = VectorOps.sq8RecallCurve(emb, k = 2, factors = Seq(1, 10), nQueries = 3)
-      .collect()
-      .map(x => x.getAs[Long]("param") ->
-        ((x.getAs[Long]("n_returned"), x.getAs[Long]("n_hits"),
-          x.getAs[Long]("n_exact"), x.getAs[Double]("recall")))).toMap
+    val r = curvePoints(VectorOps.sq8RecallCurve(emb, k = 2, factors = Seq(1, 10), nQueries = 3))
     assert(r(10L)._3 === 6L)
     assert(r(10L)._4 === 1.0,
       "k*f >= corpus: every candidate gets the exact rerank, recall is 1 by construction")

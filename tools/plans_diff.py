@@ -4,11 +4,12 @@ between any two JVM runs of the same commit.
 
     sbt "runMain graft.PlansFiles <dirA> a name1,name2"   # one checkout
     sbt "runMain graft.PlansFiles <dirB> b name1,name2"   # the other
-    python3 tools/plans_diff.py <dirA> <dirB> [name ...]
+    python3 tools/plans_diff.py <dirA> <dirB>
 
 Files are paired by query name (`<name>_<suffix>.txt`; the suffix must
-not contain `_`). With names given, only those queries are compared.
-Masked before comparing:
+not contain `_`); every plan in either directory is compared. To compare
+a subset, write only those plans: `graft.PlansFiles` takes the query
+names. Masked before comparing:
 
   - expression ids `#123`
   - `plan_id=123`
@@ -23,8 +24,9 @@ Still NOT masked: the Expand column order of multi-distinct aggregates
 (table_profile, golden_record), which also differs between two runs of
 the same commit.
 
-Prints a unified diff per differing plan and a summary line; exits 0
-when every compared plan matches and no requested plan is missing.
+Prints a unified diff per differing plan, the plans present on only one
+side, and a summary line; exits 0 when every plan is on both sides and
+matches.
 """
 import difflib
 import os
@@ -59,14 +61,13 @@ def plans(d):
 
 
 def main(argv):
-    if len(argv) < 3:
+    if len(argv) != 3:
         sys.exit(__doc__)
     a, b = plans(argv[1]), plans(argv[2])
-    names = argv[3:] or sorted(set(a) | set(b))
-    same, differ, missing = 0, [], []
-    for name in names:
+    same, differ, one_side = 0, [], []
+    for name in sorted(set(a) | set(b)):
         if name not in a or name not in b:
-            missing.append(name)
+            one_side.append(name)
             continue
         with open(a[name]) as fa, open(b[name]) as fb:
             la, lb = mask(fa.read()).splitlines(), mask(fb.read()).splitlines()
@@ -76,12 +77,12 @@ def main(argv):
         differ.append(name)
         sys.stdout.writelines(line + "\n" for line in difflib.unified_diff(
             la, lb, a[name], b[name], lineterm="", n=1))
-    print(f"{same} identical, {len(differ)} differ, {len(missing)} missing")
+    print(f"{same} identical, {len(differ)} differ, {len(one_side)} on one side only")
     if differ:
         print("differ: " + " ".join(differ))
-    if missing:
-        print("missing: " + " ".join(missing))
-    return 0 if not differ and not missing else 1
+    if one_side:
+        print("on one side only: " + " ".join(one_side))
+    return 0 if not differ and not one_side else 1
 
 
 if __name__ == "__main__":
